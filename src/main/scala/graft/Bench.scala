@@ -77,7 +77,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     // optional comma-separated name filter for profiling one query;
     // SPARK_GRAFT_BENCH_EXACT=1 switches from prefix to exact matching
     // (needed by the isolated driver: "q_dedup_ngram" must not also

@@ -64,7 +64,7 @@ object PlanGate {
     *  - `cartesian`: a [[CartesianProductExec]] is |L|×|R| work AND a
     *    full materialisation of both sides — fatal at scale unless the
     *    semantics ARE cartesian (the reference's `cartesianJoin=True`
-    *    surface, dmAudit's intended 4×10 grid).
+    *    surface).
     *  - `nested-loop`: [[BroadcastNestedLoopJoinExec]] is how Spark
     *    renders a crossJoin against a broadcast side; legitimate ONLY
     *    when the broadcast side is a bounded aggregate (1-row stats

@@ -465,11 +465,13 @@ object BloomGuard {
       changed(name) && rebuild.contains(name) &&
         fills.getOrElse(name, 0.0) > FillThreshold
     }
-    val rebuilt = toRebuild.map { case (name, keys0, _, _) =>
-      val keys = rebuild(name)().toDF("__k")
+    val rebuiltKeys = toRebuild.map { case (name, keys0, _, _) =>
+      name -> rebuild(name)().toDF("__k")
         .select(col("__k").cast("string").as("__k"))
         .union(keys0).where(col("__k").isNotNull)
         .distinct().localCheckpoint()
+    }
+    val rebuilt = rebuiltKeys.map { case (name, keys) =>
       val (nShards, perShard) = planFor(keys.count())
       val wordsPer = perShard / 64
       val sparse = deltaRows(keys, "__k", name,
@@ -491,12 +493,15 @@ object BloomGuard {
       else rebuilt.foldLeft(
         mergedW.where(!baseOf.isin(rebuiltNames.toSeq: _*)))(
         _ unionByName _)
-    writeRows(s, dir, finalW
+    // the rebuilt key sets feed `sparse` lazily: release them once the
+    // swap that consumes them has run
+    try writeRows(s, dir, finalW
       .groupBy("name")
       .agg(transform(
         array_sort(collect_list(struct(col("w"), col("bits")))),
         x => x.getField("bits")).as("words"))
       .orderBy("name"))
+    finally rebuiltKeys.foreach(_._2.unpersist())
   }
 
   /** OR each add's keys into its NAMED persisted bloom — one read, one

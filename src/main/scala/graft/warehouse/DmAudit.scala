@@ -3,7 +3,6 @@ package graft.warehouse
 import graft.GraftConf
 import graft.catalog.Layer
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Audit-dimension generator (reference transformDMAudit,
   * betl/defaultdataflows/dmAudit.py:41-69): cartesian of load operations ×
@@ -14,15 +13,11 @@ object DmAudit {
 
   val loadOperations: Seq[String] = Seq("BULK", "DELTA", "NO LOAD", "REFRESH")
 
+  /** The constant grid as local rows: no join, no job to plan it. */
   def build(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val ops = loadOperations.toDF("load_operation")
-    val scores = spark.range(1, 11)
-      .select(col("id").cast("int").as("dq_score"))
-    ops.crossJoin(scores)
-      .withColumn("nk_audit",
-        concat_ws("_", col("load_operation"), col("dq_score")))
-      .select("nk_audit", "load_operation", "dq_score")
+    (for (op <- loadOperations; sc <- 1 to 10) yield (s"${op}_$sc", op, sc))
+      .toDF("nk_audit", "load_operation", "dq_score")
   }
 
   /** Write dm_audit to BSE with a deterministic surrogate key, and emit

@@ -187,23 +187,30 @@ object StageLoad {
     // directory (rerun-safety contract, betl/PipelineClass.py:456-514)
     graft.io.ParquetUtil.safeOverwrite(spark, dim,
       conf.tablePath(Layer.BSE, spec.name))
-    // the SK/NK map is just a projection; keep only real members
-    val skMap = dim
+    val reread = graft.io.ParquetUtil.readRecovered(spark, conf.tablePath(Layer.BSE, spec.name))
+    // the SK/NK map is a projection of the WRITTEN dimension (not of
+    // `dim`'s lineage, which would run the SK plan a second time); keep
+    // only real members
+    val skMap = reread
       .filter(col(spec.skName) > 0)
       .select((spec.skName +: spec.nkCols).map(col): _*)
     graft.io.ParquetUtil.safeOverwrite(spark, skMap,
       conf.tablePath(Layer.LOD, spec.mapTableName))
-    val reread = graft.io.ParquetUtil.readRecovered(spark, conf.tablePath(Layer.BSE, spec.name))
     syncTrgSink(spark, conf, spec.name, reread, "overwrite", Some(spec.skName))
     reread
   }
+
+  /** In-memory bytes per compressed Parquet byte, for size decisions
+    * made from file sizes or the plan statistics derived from them.
+    */
+  private[warehouse] val InMemoryInflation = 4
 
   /** Broadcast only when the SK/NK map's on-disk size is under the
     * session's autoBroadcastJoinThreshold. A 500M-member dimension's map
     * would OOM the driver if broadcast unconditionally; above the
     * threshold we leave the join strategy to Catalyst/AQE (which still
     * broadcasts runtime-small sides). Compressed Parquet bytes understate
-    * the in-memory size, so a 4× inflation factor is applied.
+    * the in-memory size, so they are inflated by [[InMemoryInflation]].
     */
   private[graft] def maybeBroadcast(
       spark: SparkSession, df: DataFrame, path: String): DataFrame = {
@@ -212,7 +219,8 @@ object StageLoad {
         .replaceAll("(?i)b$", "").toLong
       catch { case _: NumberFormatException => 10L * 1024 * 1024 }
     val onDisk = graft.io.ParquetUtil.dirSizeBytes(spark, path)
-    if (threshold > 0 && onDisk >= 0 && onDisk * 4 <= threshold) broadcast(df)
+    if (threshold > 0 && onDisk >= 0 && onDisk * InMemoryInflation <= threshold)
+      broadcast(df)
     else df
   }
 

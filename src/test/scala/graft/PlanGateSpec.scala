@@ -28,8 +28,6 @@ class PlanGateSpec extends SparkSpec {
     *  - `q_join_cartesian`: the reference's `cartesianJoin=True` surface
     *    — the semantics ARE a cartesian (the operator is documented
     *    dimension-sized-only; renders as BNLJ under a broadcast side).
-    *  - `q_dm_audit`: the reference's intended 4×10 operation/score
-    *    grid (dfl_audit) — both sides are literal enums.
     *  - corpus-stat cross joins (`q_bm25`, `q_tfidf`, `q_lm_score`,
     *    `q_collocations`, `q_source_quality`, `q_mix_sources`,
     *    `q_hll_distinct`, `q_hll_grouped`, `q_weighted_sample`,
@@ -43,7 +41,6 @@ class PlanGateSpec extends SparkSpec {
     */
   private val whitelist: Map[String, Set[String]] = Map(
     "q_join_cartesian" -> Set("nested-loop", "cartesian"),
-    "q_dm_audit" -> Set("nested-loop", "cartesian"),
     "q_bm25" -> Set("nested-loop"),
     // streamed BM25: the identical scoring tail (topKFrom) over the
     // folded state tables — the same 1-row corpus-totals BNLJ

@@ -41,10 +41,59 @@ class WarehouseSpec extends SparkSpec {
 
   test("surrogate keys are dense, 1-based, and NK-ordered") {
     val df = Seq("c", "a", "b").toDF("nk")
-    val keyed = SurrogateKeys.assign(df, Seq("nk"), "sk")
-      .orderBy("sk").collect()
+    val assigned = SurrogateKeys.assign(df, Seq("nk"), "sk")
+    // a small frame takes the one-partition form: no shuffle, no broadcast
+    assert(assigned.queryExecution.sparkPlan.collect {
+      case e: org.apache.spark.sql.execution.exchange.Exchange => e
+    }.isEmpty)
+    val keyed = assigned.orderBy("sk").collect()
     assert(keyed.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
     assert(keyed.map(_.getString(1)).toSeq == Seq("a", "b", "c"))
+  }
+
+  test("property: sized and forced-partition SK maps agree and are dense") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    def nkToSk(df: org.apache.spark.sql.DataFrame,
+        numPartitions: Option[Int]): Map[Any, Long] =
+      SurrogateKeys.assign(df, Seq("nk"), "sk", numPartitions)
+        .collect().map(r => r.get(1) -> r.getLong(0)).toMap
+    def agree(df: org.apache.spark.sql.DataFrame, n: Int): Boolean = {
+      // small local frames take the one-partition form by default
+      assert(SurrogateKeys.partitionsFor(df) == 1)
+      val sized = nkToSk(df, None)
+      sized == nkToSk(df, Some(4)) &&
+        sized.values.toSeq.sorted == (1L to n.toLong)
+    }
+    val prop = Prop.forAll(
+      Gen.containerOf[Set, String](Gen.alphaStr),
+      Gen.containerOf[Set, Long](Gen.choose(-1000L, 1000L))) { (ss, ls) =>
+      val strs = (None +: ss.toSeq.map(Some(_))).zipWithIndex
+        .toDF("nk", "attr")
+      val longs = (None +: ls.toSeq.map(Some(_))).zipWithIndex
+        .toDF("nk", "attr")
+      agree(strs, ss.size + 1) && agree(longs, ls.size + 1)
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(15), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("SK sizing: a frame past one advisory partition keeps the range " +
+      "layout") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // never executed: only its estimate (8 bytes × 2^40 rows) matters
+    val big = spark.range(0, 1L << 40).toDF("nk")
+    val p = SurrogateKeys.partitionsFor(big)
+    assert(p == spark.sessionState.conf.numShufflePartitions)
+    val ranges = SurrogateKeys.rangeStamped(big, Seq(col("nk")), p)
+      .queryExecution.sparkPlan.collect {
+        case e: ShuffleExchangeExec => e.outputPartitioning
+      }
+    assert(ranges.exists {
+      case RangePartitioning(_, n) => n == p
+      case _ => false
+    }, ranges.toString)
   }
 
   test("bulkLoadDimension assigns SKs, appends default rows, emits map") {
