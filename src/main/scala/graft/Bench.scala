@@ -16,48 +16,26 @@ import org.apache.spark.sql.SparkSession
   * blocks, or ContextCleaner backlog. JIT + whole-stage-codegen caches
   * are JVM-global, so the one-time warm-up still pays those for the
   * whole run; per-context startup (~1s) is excluded from every timing.
+  *
+  * A query that throws gets no timing: it is named in both stdout lines'
+  * `failed` list, left out of `total`, and the run exits 1 after writing
+  * every output.
   */
 object Bench {
-
-  private def newSession(cpus: String, localDir: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // spill-aware reducer sizing, OPT-IN for big scale factors: with
-      // AQE coalescing on (the 4.x default), numShufflePartitions
-      // resolves to initialPartitionNum, so every shuffle starts wide
-      // and AQE coalesces toward the 64MB advisory target. At sf10 that
-      // keeps array-carrying reduce partitions (triangles adjacency
-      // attach: ~50GB payload) under executor memory instead of
-      // spilling 1.7GB-per-partition — set
-      // SPARK_GRAFT_INITIAL_PARTITIONS=512 there (the sf10 artifacts
-      // were measured with it). The default stays = cores: a 512-wide
-      // start is NOT free at small SF — explicit repartition()s and
-      // write paths bypass AQE coalescing, and a measured same-day A/B
-      // at sf0.1 showed 2.7-4x on the warehouse/graph queries
-      // (q_bulk_load_fact 19.6s vs 6.3s, q_pagerank 22.3s vs 7.4s).
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // per-query shuffle/spill space — swept after the context stops.
-      // (When the caller exports SPARK_LOCAL_DIRS — the per-JVM isolated
-      // driver — the env wins and this config is inert, which is fine:
-      // that driver already gives each JVM a fresh dir.)
-      .config("spark.local.dir", localDir)
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 
   /** Run `body` inside a fresh single-query session, then stop the
     * context and sweep its local dir so nothing leaks into the next
     * query's timing.
     */
-  private def withFreshSession[A](cpus: String)(body: SparkSession => A): A = {
+  private def withFreshSession[A](body: SparkSession => A): A = {
     val dir = java.nio.file.Files.createTempDirectory("graft_bench_q_")
-    val spark = newSession(cpus, dir.toString)
+    // per-query shuffle/spill space — swept after the context stops.
+    // (When the caller exports SPARK_LOCAL_DIRS — the per-JVM isolated
+    // driver — the env wins and this config is inert, which is fine:
+    // that driver already gives each JVM a fresh dir.)
+    val spark = SparkEntry.session(extra = Map(
+      "spark.local.dir" -> dir.toString,
+      "spark.cleaner.periodicGC.interval" -> "30s"))
     try body(spark)
     finally {
       spark.stop()
@@ -77,49 +55,26 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    // optional comma-separated name filter for profiling one query;
-    // SPARK_GRAFT_BENCH_EXACT=1 switches from prefix to exact matching
-    // (needed by the isolated driver: "q_dedup_ngram" must not also
-    // select q_dedup_ngram_prefix)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSeq)
-    val exact = sys.env.get("SPARK_GRAFT_BENCH_EXACT").contains("1")
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) =>
-        only.forall(_.exists(s => if (exact) s == n else n.startsWith(s)))
+    val cpus = SparkEntry.hostCpus
+    // optional comma-separated query/prefix list for profiling a subset
+    val selected = SparkEntry.select(SparkEntry.queries,
+      sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
+    // untimed warm-up in a THROWAWAY session: a full run of the first
+    // selected query pays JVM-global JIT/codegen/page-cache costs once
+    // outside every timed window, so the alphabetically-first query
+    // stops absorbing them. A failure here repeats, and is reported, in
+    // that query's timed run.
+    selected.headOption.foreach { case (_, fn) =>
+      withFreshSession { spark =>
+        scala.util.Try(
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save())
       }
-    // untimed warm-up in a THROWAWAY session: pay JVM-global JIT/codegen/
-    // page-cache costs once outside every timed window, so the
-    // alphabetically-first query stops absorbing them.
-    // SPARK_GRAFT_BENCH_WARMUP: first (default) = full run of the first
-    // selected query; light = a trivial scan+write that pays session/
-    // codegen startup without re-running a minutes-long heavy query
-    // (the isolated one-query-per-JVM driver uses this); none = skip.
-    sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "first") match {
-      case "none" => ()
-      case "light" =>
-        withFreshSession(cpus) { spark =>
-          try spark.read.parquet(s"$sfDir/region.parquet")
-            .write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => () }
-        }
-      case _ =>
-        selected.headOption.foreach { case (_, fn) =>
-          withFreshSession(cpus) { spark =>
-            try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            catch { case _: Throwable => () }
-          }
-        }
     }
-    def timeOnce(spark: SparkSession, name: String,
+    def timeOnce(spark: SparkSession,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Double = {
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val elapsed = (System.nanoTime() - t0) / 1e9
       // between in-session reruns: drop cached intermediates (LSH bands,
       // signatures) so rerun 2 doesn't read rerun 1's pinned storage
@@ -132,29 +87,38 @@ object Bench {
     // r4's driver numbers ran ~1.4x hot under external load).
     // SPARK_GRAFT_BENCH_RUNS=N forces exactly N timed runs per query
     // regardless of duration (the isolated driver medians across JVMs).
+    // A query that throws in any run is reported failed, with no timing.
     val forcedRuns = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt)
-    val results = selected.map { case (name, fn) =>
-      val runs = withFreshSession(cpus) { spark =>
-        val first = timeOnce(spark, name, fn)
+    val outcomes = SparkEntry.runAll("bench", selected) { (_, fn) =>
+      withFreshSession { spark =>
+        val first = timeOnce(spark, fn)
         forcedRuns match {
-          case Some(n) => first +: Seq.fill(n - 1)(timeOnce(spark, name, fn))
+          case Some(n) => first +: Seq.fill(n - 1)(timeOnce(spark, fn))
           case None =>
             if (first < 2.0)
-              Seq(first, timeOnce(spark, name, fn), timeOnce(spark, name, fn))
+              Seq(first, timeOnce(spark, fn), timeOnce(spark, fn))
             else Seq(first)
         }
       }
-      (name, runs.sorted.apply(runs.size / 2), runs)
     }
+    val results = outcomes.collect {
+      case SparkEntry.QueryRun(name, Right(runs)) =>
+        (name, runs.sorted.apply(runs.size / 2), runs)
+    }
+    val failed = outcomes.filter(_.error.isDefined).map(_.name)
+    val failedJson =
+      s""""n_failed":${failed.size},"failed":""" +
+        failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
-    // stdout line 1 — the legacy full contract line, unchanged shape:
-    // per-query medians at 3 decimals (full precision in the sidecars
-    // below), headline metric/value/sf fields last
+    // stdout line 1 — the legacy full contract line: per-query medians
+    // at 3 decimals (full precision in the sidecars below), the failed
+    // queries (left out of queries, n_queries and total), headline
+    // metric/value/sf fields last
     val qsShort = results.map { case (k, v, _) =>
       s"\"" + k + "\":" + graft.util.Fmt.fixed(v, 3)
     }.mkString("{", ",", "}")
     val line =
-      s"""{"queries":$qsShort,"n_queries":${results.size},""" +
+      s"""{"queries":$qsShort,"n_queries":${results.size},$failedJson,""" +
         s""""sf":"$sfDir","metric":"total","unit":"sec","value":$total}"""
     println(line)
     // sidecar FILES with full precision and every run per query: the
@@ -168,11 +132,9 @@ object Bench {
     val runsJson = results.map { case (k, _, rs) =>
       s"\"" + k + "\":" + rs.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val cpusJson =
-      if (cpus.forall(_.isDigit) && cpus.nonEmpty) cpus else "\"" + cpus + "\""
     val detail =
       s"""{"metric":"total","value":$total,"unit":"sec",""" +
-        s""""queries":$qs,"sf":"$sfDir","cpus":$cpusJson,""" +
+        s""""queries":$qs,$failedJson,"sf":"$sfDir","cpus":$cpus,""" +
         s""""runs":$runsJson}""" + "\n"
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "/root/repo/target/bench_last.json")
@@ -185,10 +147,11 @@ object Bench {
     }
     // stdout line 2, LAST — a compact headline line guaranteed to fit
     // whole inside the driver's 2000-char tail so its JSON parse
-    // finally succeeds: total, n_queries, sf, cpus, sidecar path
+    // finally succeeds: total, n_queries, failed, sf, cpus, sidecar path
     println(
       s"""{"metric":"total","value":$total,"unit":"sec",""" +
-        s""""n_queries":${results.size},"sf":"$sfDir","cpus":$cpusJson,""" +
-        s""""queries_detail":"$detailPath"}""")
+        s""""n_queries":${results.size},$failedJson,""" +
+        s""""sf":"$sfDir","cpus":$cpus,"queries_detail":"$detailPath"}""")
+    SparkEntry.exitOnFailures("bench", outcomes)
   }
 }

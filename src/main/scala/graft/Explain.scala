@@ -1,27 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the formatted physical plan of selected queries.
-  * Usage: runMain graft.Explain <sfDir> <queryPrefix>[,<prefix>…]
+  * Usage: runMain graft.Explain <sfDir> [<query|prefix>,…]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val prefixes = args.lift(1).map(_.split(',').toSeq).getOrElse(Seq(""))
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => prefixes.exists(n.startsWith) }
-      .foreach { case (name, fn) =>
-        println(s"\n========== $name ==========")
-        try fn(spark, sfDir).explain("formatted")
-        catch { case e: Throwable => println(s"failed: ${e.getMessage}") }
-      }
+    val spark = SparkEntry.session()
+    val runs = SparkEntry.runAll("explain",
+        SparkEntry.select(SparkEntry.queries, args.lift(1))) { (name, fn) =>
+      println(s"\n========== $name ==========")
+      fn(spark, sfDir).explain("formatted")
+    }
     spark.stop()
+    SparkEntry.exitOnFailures("explain", runs)
   }
 }

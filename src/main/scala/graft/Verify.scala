@@ -1,53 +1,40 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import scala.jdk.CollectionConverters._
+
+/** Driver-run correctness dump: each selected SparkEntry.queries result →
+  * parquet, plus oracle_sql.json for the driver's DuckDB compare and
+  * status.json with each selected query's ok/failed status (and error).
+  * Exits 1 after writing everything if any query failed.
+  * Usage: runMain graft.Verify <sfDir> <outDir> [<query|prefix>,…]
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query-name prefixes to run
-    val only: String => Boolean =
-      if (args.length > 2) { val ps = args(2).split(',').toSeq
-        name => ps.exists(name.startsWith)
-      } else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only(name) }
-      .foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          System.err.println(
-            f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
-        } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        } finally spark.catalog.clearCache()
-      }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val runs = SparkEntry.runAll("verify",
+        SparkEntry.select(SparkEntry.queries, args.lift(2))) { (name, fn) =>
+      val t0 = System.nanoTime()
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      finally spark.catalog.clearCache()
+      System.err.println(
+        f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
+    }
+    val mapper = new ObjectMapper()
+    val status = mapper.createObjectNode()
+    runs.foreach { r =>
+      val n = status.putObject(r.name)
+      n.put("status", if (r.error.isEmpty) "ok" else "failed")
+      r.error.foreach(e => n.put("error", e.toString))
+    }
+    Files.writeString(Paths.get(s"$outDir/status.json"),
+      mapper.writeValueAsString(status))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      mapper.writeValueAsString(SparkEntry.oracleSql.asJava))
     spark.stop()
+    SparkEntry.exitOnFailures("verify", runs)
   }
 }

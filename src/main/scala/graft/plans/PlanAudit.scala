@@ -1,37 +1,27 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkEntry
 
-/** Dev tool: execute every SparkEntry query and print the PlanGate
-  * findings per query — used to discover (and keep auditing) the
-  * whitelist encoded in PlanGateSpec.
-  * Usage: runMain graft.plans.PlanAudit [sfDir] [queryPrefix,...]
+/** Dev tool: execute every selected SparkEntry query and print the
+  * PlanGate findings per query — used to discover (and keep auditing)
+  * the whitelist encoded in PlanGateSpec.
+  * Usage: runMain graft.plans.PlanAudit [sfDir] [<query|prefix>,…]
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val prefixes = args.lift(1).map(_.split(',').toSeq).getOrElse(Seq(""))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => prefixes.exists(n.startsWith) }
-      .foreach { case (name, fn) =>
-        try {
-          val nodes = PlanGate.executedNodes(fn(spark, sfDir))
-          val findings = PlanGate.audit(nodes)
-          val bhj = if (PlanGate.hasBroadcastHashJoin(nodes)) " [BHJ]" else ""
-          if (findings.isEmpty) println(s"$name: clean$bhj")
-          else findings.foreach(f => println(s"$name: $f$bhj"))
-        } catch {
-          case e: Throwable => println(s"$name: ERROR ${e.getMessage}")
-        } finally spark.catalog.clearCache()
-      }
+    val spark = SparkEntry.session()
+    val runs = SparkEntry.runAll("plan-audit",
+        SparkEntry.select(SparkEntry.queries, args.lift(1))) { (name, fn) =>
+      try {
+        val nodes = PlanGate.executedNodes(fn(spark, sfDir))
+        val findings = PlanGate.audit(nodes)
+        val bhj = if (PlanGate.hasBroadcastHashJoin(nodes)) " [BHJ]" else ""
+        if (findings.isEmpty) println(s"$name: clean$bhj")
+        else findings.foreach(f => println(s"$name: $f$bhj"))
+      } finally spark.catalog.clearCache()
+    }
     spark.stop()
+    SparkEntry.exitOnFailures("plan-audit", runs)
   }
 }

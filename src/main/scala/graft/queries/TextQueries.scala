@@ -1116,12 +1116,15 @@ object TextQueries {
           sum(col("fp_gen")).as("sg"), sum(col("fp_own")).as("so"))
         .collect() // |domains| rows — bounded like a centroid table
       val scored = perDom.map { r =>
-        val (lang, n) = (r.getString(0), r.getLong(1))
-        val (sg, so) = (r.getLong(2), r.getLong(3))
+        val (lang, n, sg) = (r.getString(0), r.getLong(1), r.getLong(2))
+        // a language without training tokens has no in-domain model, so
+        // its fp_own sum is NULL; the oracle's greatest(0, NULL) clamps
+        // that excess to 0
+        val excessFp =
+          if (r.isNullAt(3)) 0L else math.max(0L, r.getLong(3) - sg)
         // clamp BEFORE the division: on non-negative operands Java
         // truncation and SQL floor division agree
-        val xFp = math.min(math.max(0L, so - sg) / n,
-          graft.functions.DetExp.MaxAbsX - 1)
+        val xFp = math.min(excessFp / n, graft.functions.DetExp.MaxAbsX - 1)
         (lang, n, xFp, graft.functions.DetExp.expFp(xFp))
       }
       val tot = scored.map(t => BigInt(t._2) * t._4).sum

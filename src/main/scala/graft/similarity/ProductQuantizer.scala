@@ -237,7 +237,8 @@ object ProductQuantizer {
     * sane only while ids are small non-negative ints — true for every
     * engine corpus (qid &lt; numQueries, cid = a seed vec_id &lt; k in
     * the dense-id corpora). Oversized/sparse id spaces fall back to the
-    * join rendering, bit-identical either way.
+    * join rendering, bit-identical either way. The gate compares by
+    * division, so huge ids cannot wrap the entry count into range.
     */
   private val MaxFusedEntries = 1 << 21
 
@@ -261,7 +262,9 @@ object ProductQuantizer {
     * bit-identical (ProductQuantizerSpec pins fused == join rendering).
     * Candidate qids/codes always hit populated slots by construction:
     * qids come from the model's own query set and codes from
-    * assignment against these books.
+    * assignment against these books. A foreign qid/code slot would
+    * score 0.0 in the fused rendering only; the join rendering drops
+    * the row.
     *
     * Fallback (ids outside the flat-array gate): each subspace resolves
     * through one broadcast hash join against its k-row LUT — the
@@ -275,10 +278,11 @@ object ProductQuantizer {
     val cids = model.lutRows.flatMap(_.map(_._2))
     val nq = if (qids.isEmpty) 0L else qids.max + 1
     val kw = if (cids.isEmpty) 0L else cids.max + 1
-    val fuse = fuseLuts && qids.nonEmpty && cids.nonEmpty &&
-      qids.forall(_ >= 0) && cids.forall(_ >= 0) &&
+    // nq, kw > 0 also rules out empty id sets and a wrapped max + 1
+    val fuse = fuseLuts && qids.forall(_ >= 0) && cids.forall(_ >= 0) &&
       model.lutRows.forall(_.nonEmpty) &&
-      nq * m * kw <= MaxFusedEntries
+      nq > 0 && kw > 0 && kw <= MaxFusedEntries / m &&
+      nq <= MaxFusedEntries / (m * kw)
     val scored =
       if (fuse) {
         val dotFlat = new Array[Double]((nq * m * kw).toInt)

@@ -279,9 +279,6 @@ object StreamingIvf {
     val pending = mutable.Map[Long,
       (Seq[(Long, Seq[Long])], Map[Long, Long], Int, DataFrame)]()
     def prefetch(cells: Seq[Long]): Unit = if (cells.nonEmpty) {
-      if (sys.env.contains("SPARK_GRAFT_SPLIT_DEBUG"))
-        println(s"[splitCells] prefetch pass: ${cells.length} cells " +
-          s"(pending=${pending.size}, have=${cents.size}, k=$targetK)")
       import s.implicits._
       val idx = cells.zipWithIndex
       val unsplit = cells.filterNot(members.contains)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -48,17 +48,11 @@ object NearlineSoak {
         "dedupx", "bm25", "xmodal", "cc")
     if (sys.env.get("SPARK_GRAFT_BLOOM").contains("off"))
       graft.streaming.BloomGuard.enabled = false
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // the streaming queries run their folds at ~8 shuffle partitions
-      // (state-store setup dominates bounded runs); the soak mirrors
-      // that so per-batch numbers transfer
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the streaming queries run their folds at ~8 shuffle partitions
+    // (state-store setup dominates bounded runs); the soak mirrors that
+    // so per-batch numbers transfer
+    val spark = graft.SparkEntry.session(
+      extra = Map("spark.sql.shuffle.partitions" -> "8"))
 
     val docs = spark.read.parquet(docsPath)
       .select(col("doc_id"), col("text"))

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Candidate-set recall of the SHIPPED ANN query surfaces against
   * their brute-force ground truth — run THROUGH `SparkEntry.queries`
   * (the production code path, not tooling replicas), so every recall
@@ -16,14 +14,7 @@ object QueryRecall {
     require(args.length >= 2,
       "usage: QueryRecall <sfDir> <outJson>")
     val (sfDir, outJson) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session()
 
     // (row label, approx query, exact ground-truth query)
     val rows = Seq(

@@ -45,13 +45,7 @@ object RecallScale {
       "/root/repo/target/sf10")
     val out = sys.env.getOrElse("SPARK_GRAFT_RECALL_OUT",
       "/root/repo/target/RECALL_SCALE.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session()
     try run(spark, sfDir, out) finally spark.stop()
   }
 

@@ -131,4 +131,34 @@ class BigramLmSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(got(1L) > got(3L))
   }
+
+  test("q_domain_weights: a language without training docs " +
+      "matches its oracle") {
+    // every zh doc_id is odd, so the zh in-domain LM trains on nothing;
+    // `want` is the query's DuckDB oracle output on this corpus, where
+    // the zh excess clamps to 0
+    val dir = java.nio.file.Files.createTempDirectory("graft-domw").toString
+    Seq(
+      (0L, "en", "spark join window spark"), (1L, "en", "join window scan"),
+      (2L, "en", "spark scan column join"), (3L, "en", "window spark join"),
+      (4L, "de", "tabelle spalte join"),
+      (5L, "de", "spalte join spark tabelle"),
+      (6L, "de", "join tabelle spalte"), (8L, "es", "tabla columna spark"),
+      (9L, "es", "columna tabla join"), (10L, "fr", "table colonne spark join"),
+      (11L, "fr", "colonne table"), (12L, "fr", "table spark colonne"),
+      (13L, "zh", "spark join"), (15L, "zh", "join spark scan"),
+      (17L, "zh", "scan window"))
+      .toDF("doc_id", "lang", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    val got = SparkEntry.queries("q_domain_weights")(spark, dir).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
+      .toSeq
+    val want = Seq(
+      ("de", 10L, 0.513971, 0.20508),
+      ("en", 14L, 0.408299, 0.258321),
+      ("es", 6L, 1.118054, 0.225126),
+      ("fr", 9L, 0.714739, 0.22561),
+      ("zh", 7L, 0.0, 0.085863))
+    assert(got == want)
+  }
 }

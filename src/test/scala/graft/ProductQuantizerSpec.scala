@@ -1,6 +1,8 @@
 package graft
 
 import graft.similarity.{KMeans, ProductQuantizer, VectorFunctions}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 
 /** Pins the PQ/ADC contract: codes compress to the codebook size, and
@@ -168,6 +170,30 @@ class ProductQuantizerSpec extends SparkSpec {
       numQueries = 2, topK = 7))
     assert(f2 == j2, "IVF-probed ADC: fused != join rendering")
     assert(f2.nonEmpty)
+  }
+
+  test("huge sparse codebook ids take the join rendering and match it") {
+    // cids near Long.MaxValue / 4 wrap the 64-bit qid × m × cid entry
+    // count back into the fused gate's range; the gate must still send
+    // them to the join rendering, whose scores do not depend on id values
+    val (books, codes) = ProductQuantizer.train(emb, "vec_id", "embedding")
+    val shift = Long.MaxValue / 4
+    val farBooks = books.map(_.withColumn("cid", col("cid") + shift))
+    val farCodes = (0 until ProductQuantizer.NumSubspaces).foldLeft(codes) {
+      (df, i) => df.withColumn(s"code_$i", col(s"code_$i") + shift)
+    }
+    def adc(bs: Seq[DataFrame], cs: DataFrame): DataFrame =
+      ProductQuantizer.adcTopKWith(spark, emb, "vec_id", "embedding", bs, cs,
+        numQueries = 3, topK = 7)
+    val far = adc(farBooks, farCodes)
+    assert(far.queryExecution.optimizedPlan.collect { case j: Join => j }
+      .nonEmpty, "huge cids must take the join rendering")
+    ProductQuantizer.fuseLuts = false
+    val joined =
+      try adc(books, codes).collect().toSeq
+      finally ProductQuantizer.fuseLuts = true
+    assert(joined.nonEmpty)
+    assert(far.collect().toSeq == joined)
   }
 
   test("joint grouped training equals the per-subspace reference chains") {

@@ -94,8 +94,6 @@ def main():
     for name in isolate:
         env = dict(base_env)
         env["SPARK_GRAFT_BENCH_ONLY"] = name
-        env["SPARK_GRAFT_BENCH_EXACT"] = "1"
-        env["SPARK_GRAFT_BENCH_WARMUP"] = "first"
         env["SPARK_GRAFT_BENCH_RUNS"] = str(args.runs)
         out = run_jvm(env, args.xmx, f"{tmp}/{name}.json")
         times = out["runs"][name]

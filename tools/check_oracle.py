@@ -1,7 +1,11 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate: for each query result
 parquet written by graft.Verify, run the paired oracle SQL in DuckDB over
-the same sf parquet tables and compare values (columns sorted by name)."""
+the same sf parquet tables and compare values (columns sorted by name).
+Every query that Verify's status.json marks failed counts as a FAIL-run
+failure (a missing status.json fails the check too).
+
+Usage: check_oracle.py <sfDir> <verifyOutDir>"""
 import json
 import sys
 import glob
@@ -30,10 +34,22 @@ def main(sf_dir: str, out_dir: str) -> int:
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracles = json.load(f)
     n_pass = n_fail = n_noracle = 0
+    try:
+        with open(f"{out_dir}/status.json") as f:
+            status = json.load(f)
+    except FileNotFoundError:
+        status = {}
+        n_fail += 1
+        print(f"  [FAIL-run ] no status.json in {out_dir}")
+    failed = {n for n, s in status.items() if s["status"] != "ok"}
+    for name in sorted(failed):
+        n_fail += 1
+        error = status[name].get("error", "").split("\n")[0]
+        print(f"  [FAIL-run ] {name}: {error}")
     for d in sorted(glob.glob(f"{out_dir}/*")):
-        if not os.path.isdir(d):
-            continue
         name = os.path.basename(d)
+        if not os.path.isdir(d) or name in failed:
+            continue
         got = pd.read_parquet(d)
         if name not in oracles:
             n_noracle += 1
