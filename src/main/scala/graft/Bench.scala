@@ -121,12 +121,12 @@ object Bench {
       s"""{"queries":$qsShort,"n_queries":${results.size},$failedJson,""" +
         s""""sf":"$sfDir","metric":"total","unit":"sec","value":$total}"""
     println(line)
-    // sidecar FILES with full precision and every run per query: the
-    // driver keeps only the final ~2000 chars of stdout, so the 5KB+
-    // full line above has never survived its tail-capture whole
-    // (BENCH_r01..r16.json all carry parsed:null). The per-query map
-    // lives here; written both to $SPARK_GRAFT_BENCH_OUT and to CWD
-    // bench_detail.json so it is discoverable without the env var.
+    // sidecar FILE with full precision and every run per query: a
+    // consumer that keeps only the final ~2000 chars of stdout never
+    // sees the 5KB+ full line above whole (BENCH_r01..r16.json all
+    // carry parsed:null). The per-query map lives here, at
+    // $SPARK_GRAFT_BENCH_OUT (default target/bench_last.json under the
+    // working directory), and the last stdout line names it.
     val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val runsJson = results.map { case (k, _, rs) =>
@@ -136,15 +136,12 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec",""" +
         s""""queries":$qs,$failedJson,"sf":"$sfDir","cpus":$cpus,""" +
         s""""runs":$runsJson}""" + "\n"
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "/root/repo/target/bench_last.json")
-    val detailPath = java.nio.file.Paths.get("bench_detail.json")
-      .toAbsolutePath.toString
-    Seq(outPath, detailPath).distinct.foreach { path =>
-      val p = java.nio.file.Paths.get(path)
-      Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-      java.nio.file.Files.write(p, detail.getBytes("UTF-8"))
-    }
+    val detailPath = java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench_last.json"))
+      .toAbsolutePath
+    Option(detailPath.getParent)
+      .foreach(java.nio.file.Files.createDirectories(_))
+    java.nio.file.Files.write(detailPath, detail.getBytes("UTF-8"))
     // stdout line 2, LAST — a compact headline line guaranteed to fit
     // whole inside the driver's 2000-char tail so its JSON parse
     // finally succeeds: total, n_queries, failed, sf, cpus, sidecar path

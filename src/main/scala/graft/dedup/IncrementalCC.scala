@@ -84,12 +84,10 @@ object IncrementalCC {
 
   /** Initialise the combined nearline-annotate state: the gram index,
     * the emitted-pairs store, the bucketed labels base, the empty
-    * remap, and the doc-id bloom. `capacityHint` pre-sizes the bloom
-    * for deployments that know their corpus scale.
+    * remap, and the doc-id bloom.
     */
   def initState(s: SparkSession, indexDir: String, pairsDir: String,
-      labelsDir: String, remapDir: String,
-      capacityHint: Long = 0L): Unit = {
+      labelsDir: String, remapDir: String): Unit = {
     val empty = (schema: StructType) => s.createDataFrame(
       s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     empty(StructType(Seq(StructField("doc", LongType),
@@ -105,7 +103,7 @@ object IncrementalCC {
     empty(StructType(Seq(StructField("old", LongType),
       StructField("fin", LongType))))
       .write.mode("overwrite").parquet(remapDir)
-    BloomGuard.init(s, bloomDir(labelsDir), capacityHint = capacityHint)
+    BloomGuard.init(s, bloomDir(labelsDir))
   }
 
   /** Read labels rows of the given `kb=` buckets only (None = all) —
@@ -149,14 +147,10 @@ object IncrementalCC {
     Seq(indexDir, pairsDir, labelsDir).foreach(
       ParquetUtil.recoverAppend(s, _))
     ParquetUtil.recoverInterrupted(s, remapDir)
-    val bloom = bloomDir(labelsDir)
-    val batch = b.select(col("doc"), col("s"))
-    val exact = BloomGuard.needExact(s, bloom, batch, "doc")
-    val fresh =
-      if (!exact) batch
-      else batch.join(readLabelBuckets(s, labelsDir, None).select(
-          col("id").as("doc")), Seq("doc"), "left_anti")
-        .localCheckpoint()
+    // the bloom records the fresh docs here, before every append below
+    val (fresh, exact) = BloomGuard.freshRows(s, bloomDir(labelsDir),
+      b.select(col("doc"), col("s")), "doc",
+      () => readLabelBuckets(s, labelsDir, None).select("id"))
     // empty batch or pure replay: write NOTHING
     if (fresh.isEmpty) return
     val newRows = fresh
@@ -248,9 +242,6 @@ object IncrementalCC {
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       }
     // ---- writes, in the contract's order ----
-    BloomGuard.addKeys(s, bloom, fresh.select("doc"), "doc",
-      stateKeys = Some(() =>
-        readLabelBuckets(s, labelsDir, None).select("id")))
     ParquetUtil.safeAppend(s, delta, pairsDir)
     val idxNew =
       if (!exact) newRows

@@ -48,7 +48,19 @@ object BloomFilter {
     */
   def build(
       df: DataFrame, keyCol: String, numBits: Int,
-      numHashes: Int): Array[Long] = {
+      numHashes: Int): Array[Long] =
+    buildShards(df, keyCol, numBits, numHashes).head
+
+  /** The one rendering of the bit algebra: `numShards` bitsets of
+    * `numBits` each, filled by ONE aggregation keyed by (shard, word).
+    * `shard` maps the string-cast key column to its bitset's index in
+    * [0, numShards); the single-bitset default is the literal 0, so
+    * one bitset costs no second hash per key.
+    */
+  def buildShards(
+      df: DataFrame, keyCol: String, numBits: Int, numHashes: Int,
+      numShards: Int = 1,
+      shard: Column => Column = _ => lit(0)): IndexedSeq[Array[Long]] = {
     require(numBits % 64 == 0 && numBits > 0, "numBits must be a multiple of 64")
     require(numHashes >= 1 && numHashes <= 16, "1 <= numHashes <= 16")
     val pow2 = array((0 until 64).map(j => lit(1L << j)): _*)
@@ -56,15 +68,17 @@ object BloomFilter {
     // ignore them) and a null hash would NPE the getLong below
     val words = df
       .where(col(keyCol).isNotNull)
-      .select(hashCol(col(keyCol)).as("__bh"))
-      .select(explode(
+      .select(col(keyCol).cast("string").as("__k"))
+      .select(shard(col("__k")).cast("int").as("shard"),
+        hashCol(col("__k")).as("__bh"))
+      .select(col("shard"), explode(
         array(positions(col("__bh"), numBits, numHashes): _*)).as("p"))
-      .select((col("p") / 64).cast("long").as("w"),
+      .select(col("shard"), (col("p") / 64).cast("long").as("w"),
         element_at(pow2, (col("p") % 64).cast("int") + 1).as("mask"))
-      .groupBy("w").agg(bit_or(col("mask")).as("bits"))
+      .groupBy("shard", "w").agg(bit_or(col("mask")).as("bits"))
       .collect()
-    val out = new Array[Long](numBits / 64)
-    words.foreach(r => out(r.getLong(0).toInt) = r.getLong(1))
+    val out = IndexedSeq.fill(numShards)(new Array[Long](numBits / 64))
+    words.foreach(r => out(r.getInt(0))(r.getLong(1).toInt) = r.getLong(2))
     out
   }
 

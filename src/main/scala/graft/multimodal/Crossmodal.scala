@@ -113,32 +113,22 @@ object Crossmodal {
     * Sub-O(state) probe ([[graft.streaming.BloomGuard]], written
     * BEFORE the append it covers): fresh batches skip the anti-join
     * and never read the index; bloom-hit batches take the exact
-    * anti-join, materialised (localCheckpoint) before the append so
-    * the plan never reads the dir it is writing (the
-    * StreamingDecontam read-your-write convention).
+    * anti-join ([[graft.streaming.BloomGuard.freshRows]]).
     */
   def applyBatch(s: org.apache.spark.sql.SparkSession,
       projected: org.apache.spark.sql.DataFrame, stateDir: String): Unit = {
     import graft.streaming.{BloomGuard, StateScanMeter}
-    val bloom = bloomDir(stateDir)
     // materialise the batch ONCE at entry: the caller's frame carries
     // the decode+featurize+projection lineage, and the guard's probe,
     // the bloom update, and the append are three separate actions —
     // unmaterialised, each would re-run the media decode (measured
     // 17.3 -> 24.9s at sf10 before this checkpoint)
     val rows = projected.select("doc_id", "mv").localCheckpoint()
-    val fresh =
-      if (!BloomGuard.needExact(s, bloom, rows, "doc_id")) rows
-      else {
-        StateScanMeter.add(s, stateDir)
-        rows.join(s.read.parquet(stateDir).select("doc_id"),
-          Seq("doc_id"), "left_anti").localCheckpoint()
-      }
-    BloomGuard.addKeys(s, bloom, fresh.select("doc_id"), "doc_id",
-      stateKeys = Some(() => {
+    val (fresh, _) = BloomGuard.freshRows(s, bloomDir(stateDir), rows,
+      "doc_id", () => {
         StateScanMeter.add(s, stateDir)
         s.read.parquet(stateDir).select("doc_id")
-      }))
+      })
     fresh.write.mode("append").parquet(stateDir)
     ()
   }

@@ -63,20 +63,11 @@ object StreamingDecontam {
     import graft.streaming.{BloomGuard, StateScanMeter}
     val bs = b.sparkSession
     val batch = b.select("vec_id", "embedding")
-    val fresh =
-      if (!BloomGuard.needExact(bs, stateDir + "_bloom", batch,
-          "vec_id")) batch
-      else {
-        StateScanMeter.add(bs, stateDir)
-        batch.join(bs.read.parquet(stateDir).select("vec_id"),
-          Seq("vec_id"), "left_anti").localCheckpoint()
-      }
-    BloomGuard.addKeys(bs, stateDir + "_bloom",
-      fresh.select("vec_id"), "vec_id",
-      stateKeys = Some(() => {
+    val (fresh, _) = BloomGuard.freshRows(bs, stateDir + "_bloom", batch,
+      "vec_id", () => {
         StateScanMeter.add(bs, stateDir)
         bs.read.parquet(stateDir).select("vec_id")
-      }))
+      })
     fresh
       .select(col("vec_id"),
         maxEvalCos(bs, eval, col("embedding")).as("max_eval_cos"))

@@ -46,6 +46,15 @@ object StreamingIvf {
   /** The postings' Bloom-guard state dir. */
   def bloomDir(postingsDir: String): String = postingsDir + "_bloom"
 
+  /** The postings' vec-id read, metered — the replay guard's exact
+    * probe and resize source.
+    */
+  private def postingsKeys(s: SparkSession, postingsDir: String)
+      : () => DataFrame = () => {
+    graft.streaming.StateScanMeter.add(s, postingsDir)
+    s.read.parquet(postingsDir).select("vec_id")
+  }
+
   /** Initialise the empty postings frame (sums start on first batch)
     * and the vec-id Bloom guard.
     */
@@ -62,7 +71,7 @@ object StreamingIvf {
   /** Fold one micro-batch of (vec_id, embedding, label) vectors. */
   def applyBatch(s: SparkSession, b: DataFrame, batchId: Long,
       sumsDir: String, postingsDir: String): Unit = {
-    import graft.streaming.{BloomGuard, StateScanMeter}
+    import graft.streaming.BloomGuard
     val applied = graft.io.ParquetUtil.lastBatch(s, sumsDir)
     if (applied.exists(batchId <= _)) return
     val batch = b.select("vec_id", "embedding", "label").cache()
@@ -72,15 +81,9 @@ object StreamingIvf {
       //    crash after this write replays into a skipped append. The
       //    vec-id bloom (written before the append it covers) proves
       //    fresh batches new row-locally, so the steady state never
-      //    reads the postings; bloom hits take the exact probe below.
-      val fresh =
-        if (!BloomGuard.needExact(s, bloomDir(postingsDir), batch,
-            "vec_id")) batch
-        else {
-          StateScanMeter.add(s, postingsDir)
-          batch.join(s.read.parquet(postingsDir).select("vec_id"),
-            Seq("vec_id"), "left_anti").localCheckpoint()
-        }
+      //    reads the postings; bloom hits take the exact probe.
+      val (fresh, _) = BloomGuard.freshRows(s, bloomDir(postingsDir),
+        batch, "vec_id", postingsKeys(s, postingsDir))
       val freshCnt = fresh.count()
       // Enforce the batch-atomicity invariant the sums fold rests on:
       // either every vec_id is new (normal batch) or none is (a whole-
@@ -93,12 +96,6 @@ object StreamingIvf {
           s"StreamingIvf batch $batchId re-delivers ${batchCnt - freshCnt} " +
             s"of $batchCnt vec_ids already in the postings: batches must " +
             "be atomic (all-new or an exact replay)")
-      BloomGuard.addKeys(s, bloomDir(postingsDir),
-        fresh.select("vec_id"), "vec_id",
-        stateKeys = Some(() => {
-          StateScanMeter.add(s, postingsDir)
-          s.read.parquet(postingsDir).select("vec_id")
-        }))
       fresh.write.mode("append").parquet(postingsDir)
       // 2. sums partial from the RAW batch (watermark-gated above, NOT
       //    anti-joined — after the crash the batch is already in postings
@@ -494,26 +491,12 @@ object StreamingIvf {
     */
   def applyFrozenBatch(s: SparkSession, b: DataFrame,
       centFp: DataFrame, postingsDir: String): Unit = {
-    import graft.streaming.{BloomGuard, StateScanMeter}
+    import graft.streaming.BloomGuard
     val batch = b.select("vec_id", "embedding")
-    val fresh =
-      if (!BloomGuard.needExact(s, bloomDir(postingsDir), batch,
-          "vec_id")) batch
-      else {
-        // exact replay guard, materialised before the append below
-        // writes into the dir the probe reads
-        StateScanMeter.add(s, postingsDir)
-        batch.join(s.read.parquet(postingsDir).select("vec_id"),
-          Seq("vec_id"), "left_anti").localCheckpoint()
-      }
+    val (fresh, _) = BloomGuard.freshRows(s, bloomDir(postingsDir),
+      batch, "vec_id", postingsKeys(s, postingsDir))
     val asg = KMeans.assign(
       KMeans.pointsFp(fresh, "vec_id", "embedding"), centFp)
-    BloomGuard.addKeys(s, bloomDir(postingsDir),
-      fresh.select("vec_id"), "vec_id",
-      stateKeys = Some(() => {
-        StateScanMeter.add(s, postingsDir)
-        s.read.parquet(postingsDir).select("vec_id")
-      }))
     fresh.join(asg, "vec_id")
       .select(col("vec_id"), col("embedding"),
         col("cid").cast("int").as("label"))

@@ -52,24 +52,15 @@ object StreamingIvfPq {
       m: Int = ProductQuantizer.NumSubspaces): Unit = {
     import graft.streaming.{BloomGuard, StateScanMeter}
     val batch = b.select("vec_id", "embedding")
-    val fresh =
-      if (!BloomGuard.needExact(s, postingsDir + "_bloom", batch,
-          "vec_id")) batch
-      else {
+    val (fresh, _) = BloomGuard.freshRows(s, postingsDir + "_bloom",
+      batch, "vec_id", () => {
         StateScanMeter.add(s, postingsDir)
-        batch.join(s.read.parquet(postingsDir).select("vec_id"),
-          Seq("vec_id"), "left_anti").localCheckpoint()
-      }
+        s.read.parquet(postingsDir).select("vec_id")
+      })
     val cids = KMeans.assign(
       KMeans.pointsFp(fresh, "vec_id", "embedding"), centFp)
     val codes = ProductQuantizer.assignCodes(
       fresh, "vec_id", "embedding", books, m)
-    BloomGuard.addKeys(s, postingsDir + "_bloom",
-      fresh.select("vec_id"), "vec_id",
-      stateKeys = Some(() => {
-        StateScanMeter.add(s, postingsDir)
-        s.read.parquet(postingsDir).select("vec_id")
-      }))
     fresh.join(cids, "vec_id").join(codes, "vec_id")
       .select(col("vec_id") +: col("embedding") +: col("cid") +:
         (0 until m).map(i => col(s"code_$i")): _*)

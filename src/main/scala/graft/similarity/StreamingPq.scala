@@ -50,22 +50,13 @@ object StreamingPq {
       m: Int = ProductQuantizer.NumSubspaces): Unit = {
     import graft.streaming.{BloomGuard, StateScanMeter}
     val batch = b.select("vec_id", "embedding")
-    val fresh =
-      if (!BloomGuard.needExact(s, postingsDir + "_bloom", batch,
-          "vec_id")) batch
-      else {
-        StateScanMeter.add(s, postingsDir)
-        batch.join(s.read.parquet(postingsDir).select("vec_id"),
-          Seq("vec_id"), "left_anti").localCheckpoint()
-      }
-    val codes = ProductQuantizer.assignCodes(
-      fresh, "vec_id", "embedding", cents, m)
-    BloomGuard.addKeys(s, postingsDir + "_bloom",
-      fresh.select("vec_id"), "vec_id",
-      stateKeys = Some(() => {
+    val (fresh, _) = BloomGuard.freshRows(s, postingsDir + "_bloom",
+      batch, "vec_id", () => {
         StateScanMeter.add(s, postingsDir)
         s.read.parquet(postingsDir).select("vec_id")
-      }))
+      })
+    val codes = ProductQuantizer.assignCodes(
+      fresh, "vec_id", "embedding", cents, m)
     fresh.join(codes, "vec_id")
       .write.mode("append").parquet(postingsDir)
   }

@@ -35,8 +35,7 @@ import org.apache.spark.sql.types._
   *
   *  - '''Cardinality-derived sizing.''' [[planFor]] sizes a bitset at
   *    [[TargetBitsPerKey]] (~24 bits/key at k=5 → steady fill ~0.19,
-  *    FP ~2·10^-4), pow2-rounded; [[init]] takes a `capacityHint` for
-  *    deployments that know their scale up front.
+  *    FP ~2·10^-4), pow2-rounded.
   *  - '''Resize instead of saturate.''' [[addKeysMulti]] checks the
   *    post-OR fill ratio (driver-side popcount, O(m/64)); past
   *    [[FillThreshold]] it REBUILDS the bitset at [[planFor]]'s size
@@ -59,14 +58,15 @@ import org.apache.spark.sql.types._
   *    md5("bloomshard:"+key) — independent of the position hashes, so
   *    per-shard FP math is unchanged), and each shard is a standard
   *    bitset. Capacity is then S × 5.6M keys — 10^10 keys is S=2048,
-  *    32 GiB total, still ~0.4% of a 1-KiB-per-row state table. Past
-  *    [[distributedBuildMinBytes]] the per-batch build runs as a
-  *    distributed (name, w, bits) OR-merge ([[addKeysDistributed]]):
-  *    existing bitsets never cross the driver, only O(#names) fill
-  *    statistics collect — the probe and this object's API are
-  *    unchanged by the promotion. Below the gate the sub-16MiB driver
-  *    round-trip stays (cheaper than distributed-join machinery at
-  *    micro-batch cadence).
+  *    32 GiB total, still ~0.4% of a 1-KiB-per-row state table.
+  *  - '''Driver bytes.''' The build ([[addKeysMulti]]) and the probe
+  *    ([[needExact]]) each hold a name's whole bitset — every shard —
+  *    on the driver once per batch: the build reads, ORs and swaps the
+  *    rows there, and the probe ships the assembled bitset to every
+  *    task in its kernel's closure. Shards remain the unit of layout
+  *    (one parquet row each, under the hash family's ceiling), not a
+  *    bound on driver bytes: a guard that must stay off the driver
+  *    needs a distributed probe and a distributed build, on one path.
   *
   * Layout: one parquet row `(name, words: array<long>)` PER NAMED
   * bitset (shards are just more names) — a fold guarding several
@@ -114,20 +114,6 @@ object BloomGuard {
     * only so specs can force shard promotion at test scale.
     */
   private[graft] var maxShardBits: Int = 1 << 27
-
-  /** Guard-dir size past which [[addKeysMulti]] runs the DISTRIBUTED
-    * build: the existing rows never round-trip the driver — the
-    * delta aggregation's (name, w, bits) rows OR into the persisted
-    * rows word-level inside the write's own plan, and only O(#names)
-    * fill statistics collect. Below the gate the driver OR path stays
-    * (a sub-16MiB round-trip is cheaper than the extra distributed
-    * jobs at micro-batch cadence — the same bounded-frame budget class
-    * as [[graft.dedup.IncrementalCC.DriverCcMaxEdges]]); past ~10^8
-    * keys (≈300 MB of shards at 24 bits/key) the distributed path is
-    * what keeps the per-batch driver bytes O(changed words). Var so
-    * specs can force the distributed path at test scale.
-    */
-  private[graft] var distributedBuildMinBytes: Long = 1L << 24
 
   /** Kill switch for the counterfactual soak arm: with the guard off,
     * folds take their pre-guard path (exact anti-join against the full
@@ -226,44 +212,20 @@ object BloomGuard {
   // persistence
   // ------------------------------------------------------------------
 
-  /** Initialise empty bitset(s) (all-zero), sized for `capacityHint`
-    * expected keys (floor [[DefaultNumBits]]; 0 = floor). Deployments
-    * that know their scale up front start at size and never pay a
-    * resize; everyone else grows geometrically via [[addKeysMulti]]'s
-    * trigger.
+  /** Initialise empty bitset(s) (all-zero) of `numBits` each (sharded
+    * when that exceeds [[maxShardBits]]); they grow geometrically via
+    * [[addKeysMulti]]'s trigger.
     */
   def init(s: SparkSession, dir: String,
       names: Seq[String] = Seq(DefaultName),
-      numBits: Int = DefaultNumBits,
-      capacityHint: Long = 0L): Unit = {
+      numBits: Int = DefaultNumBits): Unit = {
     require(numBits % 64 == 0 && numBits > 0, "numBits must be multiple of 64")
     require(names.forall(!_.contains("#")),
       "bitset names must not contain '#' (the shard-row separator)")
     val (nShards, perShard) =
-      if (capacityHint > 0L) planFor(capacityHint)
-      else if (numBits <= maxShardBits) (1, numBits)
+      if (numBits <= maxShardBits) (1, numBits)
       else planFor(numBits / TargetBitsPerKey)
-    val totalBytes =
-      names.length.toLong * nShards * (perShard / 8)
-    if (totalBytes > distributedBuildMinBytes) {
-      // capacity-hinted inits past the driver budget generate their
-      // zero bitsets distributed — a 10^10-key hint is 32 GiB of shards
-      val wordsPer = perShard / 64
-      val zeros = names.map { n =>
-        s.range(nShards.toLong * wordsPer).toDF("i")
-          .select(
-            (if (nShards == 1) lit(n)
-             else concat(lit(n + "#"),
-               (col("i") / wordsPer).cast("long").cast("string"),
-               lit(s"/$nShards"))).as("name"),
-            (col("i") % wordsPer).as("w"), lit(0L).as("bits"))
-      }.reduce(_ unionByName _)
-      writeRows(s, dir, zeros.groupBy("name")
-        .agg(transform(
-          array_sort(collect_list(struct(col("w"), col("bits")))),
-          x => x.getField("bits")).as("words"))
-        .orderBy("name"))
-    } else write(s, dir, names.flatMap { n =>
+    write(s, dir, names.flatMap { n =>
       (0 until nShards).map(i =>
         shardRowName(n, i, nShards) -> new Array[Long](perShard / 64))
     }.toMap)
@@ -293,24 +255,20 @@ object BloomGuard {
       name: String = DefaultName): Option[NamedBloom] =
     readAll(s, dir).flatMap(assemble(_, name))
 
-  private def writeRows(s: SparkSession, dir: String,
-      rows: DataFrame): Unit = {
-    // failpoints=false: the folds' crash specs aim ParquetUtil.crashPoint
-    // at their OWN state writes; the bloom swap has its own failpoint
-    ParquetUtil.safeOverwrite(s, rows.coalesce(1), dir,
-      failpoints = false)
-    if (crashAfterWrite) {
-      crashAfterWrite = false
-      throw new RuntimeException("injected crash after bloom write")
-    }
-  }
-
   private def write(s: SparkSession, dir: String,
       blooms: Map[String, Array[Long]]): Unit = {
     import scala.jdk.CollectionConverters._
     val rows = blooms.toSeq.sortBy(_._1).map { case (n, w) =>
       org.apache.spark.sql.Row(n, w.toSeq) }
-    writeRows(s, dir, s.createDataFrame(rows.asJava, schema))
+    // failpoints=false: the folds' crash specs aim ParquetUtil.crashPoint
+    // at their OWN state writes; the bloom swap has its own failpoint
+    ParquetUtil.safeOverwrite(s,
+      s.createDataFrame(rows.asJava, schema).coalesce(1), dir,
+      failpoints = false)
+    if (crashAfterWrite) {
+      crashAfterWrite = false
+      throw new RuntimeException("injected crash after bloom write")
+    }
   }
 
   /** Failpoint for the guard's own crash spec: the next [[addKeys]] /
@@ -324,191 +282,27 @@ object BloomGuard {
   // build / OR / resize
   // ------------------------------------------------------------------
 
-  /** Shard-routing hash column — salted separately from the position
-    * hash so shard choice and bit positions are independent.
-    */
-  private def shardHashCol(c: Column): Column =
-    TextFunctions.tokenHash60(concat(lit("bloomshard:"), c))
-
-  /** Build per-shard bitsets in ONE distributed aggregation: keys
-    * route by the salted shard hash's top bits, positions by the
-    * standard family within the shard's bitset.
+  /** Build one name's delta bitsets (one per shard) from a key frame
+    * in ONE aggregation — [[BloomFilter.buildShards]], keys routed by
+    * the top bits of a separately-salted hash so shard choice and bit
+    * positions are independent.
     */
   private def buildSharded(df: DataFrame, keyCol: String,
-      shardBits: Int, bitsPerShard: Int): IndexedSeq[Array[Long]] = {
-    if (shardBits == 0)
-      return IndexedSeq(
-        BloomFilter.build(df, keyCol, bitsPerShard, DefaultNumHashes))
-    val pow2 = array((0 until 64).map(j => lit(1L << j)): _*)
-    val hashed = df.where(col(keyCol).isNotNull)
-      .select(col(keyCol).cast("string").as("__k"))
-      .select(
-        shiftrightunsigned(shardHashCol(col("__k")), 60 - shardBits)
-          .cast("int").as("shard"),
-        BloomFilter.hashCol(col("__k")).as("__bh"))
-    val rows = hashed
-      .select(col("shard"), explode(array(
-        BloomFilter.positions(col("__bh"), bitsPerShard,
-          DefaultNumHashes): _*)).as("p"))
-      .select(col("shard"), (col("p") / 64).cast("long").as("w"),
-        element_at(pow2, (col("p") % 64).cast("int") + 1).as("mask"))
-      .groupBy("shard", "w").agg(bit_or(col("mask")).as("bits"))
-      .collect()
-    val out = Array.fill(1 << shardBits)(new Array[Long](bitsPerShard / 64))
-    rows.foreach(r =>
-      out(r.getInt(0))(r.getLong(1).toInt) = r.getLong(2))
-    out.toIndexedSeq
-  }
-
-  /** One add's delta word rows as a FRAME — (name, w, bits) under the
-    * full `name#i/S` shard row names, never collected: the same
-    * position/mask algebra as [[buildSharded]] with the OR left to run
-    * distributed.
-    */
-  private def deltaRows(df: DataFrame, keyCol: String, base: String,
-      shardBits: Int, bitsPerShard: Int): DataFrame = {
-    val pow2 = array((0 until 64).map(j => lit(1L << j)): _*)
-    val nShards = 1 << shardBits
-    val hashed = df.where(col(keyCol).isNotNull)
-      .select(col(keyCol).cast("string").as("__k"))
-      .select(
-        (if (shardBits == 0) lit(0)
-         else shiftrightunsigned(shardHashCol(col("__k")), 60 - shardBits)
-           .cast("int")).as("shard"),
-        BloomFilter.hashCol(col("__k")).as("__bh"))
-    hashed
-      .select(col("shard"), explode(array(
-        BloomFilter.positions(col("__bh"), bitsPerShard,
-          DefaultNumHashes): _*)).as("p"))
-      .select(
-        (if (nShards == 1) lit(base)
-         else concat(lit(base + "#"), col("shard").cast("string"),
-           lit(s"/$nShards"))).as("name"),
-        (col("p") / 64).cast("long").as("w"),
-        element_at(pow2, (col("p") % 64).cast("int") + 1).as("mask"))
-      .groupBy("name", "w").agg(bit_or(col("mask")).as("dbits"))
-  }
-
-  /** Shard metadata ((numShards, wordsPerShard)) for a base name from
-    * the dir's (rowName → word count) map — [[assemble]]'s complete-set
-    * validation without touching bitset bytes.
-    */
-  private def shardMeta(names: Map[String, Int], name: String)
-      : Option[(Int, Int)] =
-    names.get(name).map(sz => (1, sz)).orElse {
-      val pre = name + "#"
-      val parts = names.toSeq.collect {
-        case (n, sz) if n.startsWith(pre) &&
-            n.substring(pre.length).matches("\\d+/\\d+") =>
-          val Array(i, s) = n.substring(pre.length).split("/")
-          (i.toInt, s.toInt, sz)
-      }
-      parts.headOption.map(_._2).filter { s =>
-        parts.length == s && parts.forall(_._2 == s) &&
-          parts.map(_._1).sorted == (0 until s) &&
-          parts.map(_._3).distinct.length == 1
-      }.map(s => (s, parts.head._3))
-    }
-
-  /** The DISTRIBUTED [[addKeysMulti]] rendering for guard dirs past
-    * [[distributedBuildMinBytes]]: existing bitset rows are read,
-    * OR-merged with the adds' delta word rows, optionally rebuilt, and
-    * swapped back WITHOUT the bitsets ever crossing the driver — only
-    * per-name fill statistics (O(#names) rows) collect. Same OR
-    * algebra, same trigger arithmetic, same written values as the
-    * driver path (BloomGuardSpec pins the equality).
-    */
-  private def addKeysDistributed(s: SparkSession, dir: String,
-      adds: Seq[(DataFrame, String, String)],
-      rebuild: Map[String, () => DataFrame]): Unit = {
-    val metaRows = s.read.schema(schema).parquet(dir)
-      .select(col("name"), size(col("words")).as("nw")).collect()
-    if (metaRows.isEmpty) return
-    val meta = metaRows.map(r => r.getString(0) -> r.getInt(1)).toMap
-    // group same-name adds (rare) so each name ORs/rebuilds once
-    val byName = adds.groupBy(_._3).map { case (name, as) =>
-      val (nShards, wps) = shardMeta(meta, name).getOrElse(
-        throw new IllegalArgumentException(
-          s"BloomGuard: bitset '$name' was not initialised in $dir"))
-      val keys = as.map { case (df, keyCol, _) =>
-        df.where(col(keyCol).isNotNull)
-          .select(col(keyCol).cast("string").as("__k"))
-      }.reduce(_ unionByName _)
-      (name, keys, nShards, wps)
-    }.toSeq
-    val delta = byName.map { case (name, keys, nShards, wps) =>
-      deltaRows(keys, "__k", name,
-        Integer.numberOfTrailingZeros(nShards), wps * 64)
-    }.reduce(_ unionByName _)
-      .groupBy("name", "w").agg(bit_or(col("dbits")).as("dbits"))
-      .localCheckpoint()
-    // no (non-null) keys in any add — a pure replay swaps nothing
-    if (delta.isEmpty) return
-    val baseOf = substring_index(col("name"), "#", 1)
-    val mergedW = s.read.schema(schema).parquet(dir)
-      .select(col("name"), posexplode(col("words")).as(Seq("w", "bits")))
-      .select(col("name"), col("w").cast("long").as("w"), col("bits"))
-      .join(delta, Seq("name", "w"), "left")
-      .select(col("name"), col("w"),
-        col("bits").bitwiseOR(coalesce(col("dbits"), lit(0L))).as("bits"))
-      .localCheckpoint()
-    // per-base fill ratios — the only driver transfer, O(#names)
-    val fills = mergedW.groupBy(baseOf.as("base"))
-      .agg(sum(bit_count(col("bits"))).as("ones"),
-        count(lit(1)).as("nw"))
-      .collect()
-      .map(r => r.getString(0) ->
-        (r.getLong(1).toDouble / (r.getLong(2) * 64L))).toMap
-    val changed = delta.select(baseOf.as("b")).distinct()
-      .collect().map(_.getString(0)).toSet
-    val toRebuild = byName.filter { case (name, _, _, _) =>
-      changed(name) && rebuild.contains(name) &&
-        fills.getOrElse(name, 0.0) > FillThreshold
-    }
-    val rebuiltKeys = toRebuild.map { case (name, keys0, _, _) =>
-      name -> rebuild(name)().toDF("__k")
-        .select(col("__k").cast("string").as("__k"))
-        .union(keys0).where(col("__k").isNotNull)
-        .distinct().localCheckpoint()
-    }
-    val rebuilt = rebuiltKeys.map { case (name, keys) =>
-      val (nShards, perShard) = planFor(keys.count())
-      val wordsPer = perShard / 64
-      val sparse = deltaRows(keys, "__k", name,
-        Integer.numberOfTrailingZeros(nShards), perShard)
-      val full = s.range(nShards.toLong * wordsPer).toDF("i")
-        .select(
-          (if (nShards == 1) lit(name)
-           else concat(lit(name + "#"),
-             (col("i") / wordsPer).cast("long").cast("string"),
-             lit(s"/$nShards"))).as("name"),
-          (col("i") % wordsPer).as("w"))
-      full.join(sparse, Seq("name", "w"), "left")
-        .select(col("name"), col("w"),
-          coalesce(col("dbits"), lit(0L)).as("bits"))
-    }
-    val rebuiltNames = toRebuild.map(_._1).toSet
-    val finalW =
-      if (rebuilt.isEmpty) mergedW
-      else rebuilt.foldLeft(
-        mergedW.where(!baseOf.isin(rebuiltNames.toSeq: _*)))(
-        _ unionByName _)
-    // the rebuilt key sets feed `sparse` lazily: release them once the
-    // swap that consumes them has run
-    try writeRows(s, dir, finalW
-      .groupBy("name")
-      .agg(transform(
-        array_sort(collect_list(struct(col("w"), col("bits")))),
-        x => x.getField("bits")).as("words"))
-      .orderBy("name"))
-    finally rebuiltKeys.foreach(_._2.unpersist())
-  }
+      shardBits: Int, bitsPerShard: Int): IndexedSeq[Array[Long]] =
+    BloomFilter.buildShards(df, keyCol, bitsPerShard, DefaultNumHashes,
+      1 << shardBits, k =>
+        if (shardBits == 0) lit(0)
+        else shiftrightunsigned(
+          TextFunctions.tokenHash60(concat(lit("bloomshard:"), k)),
+          60 - shardBits))
 
   /** OR each add's keys into its NAMED persisted bloom — one read, one
     * combined swap for the whole dir; run BEFORE the state appends it
     * covers. Key hashing casts through string (the
     * [[BloomFilter.hashCol]] contract), so long ids and string keys
-    * share one code path.
+    * share one code path. Adds under the SAME name OR (and rebuild) as
+    * one key set: rebuilding from one add's keys alone would drop the
+    * others' from the bloom before the fold appends them.
     *
     * Adds whose frame is EMPTY contribute nothing and a batch whose
     * adds are ALL empty (a pure replay) swaps NOTHING — the guard dir
@@ -530,23 +324,19 @@ object BloomGuard {
     */
   def addKeysMulti(s: SparkSession, dir: String,
       adds: Seq[(DataFrame, String, String)],
-      rebuild: Map[String, () => DataFrame] = Map.empty): Unit = {
-    // guard dirs past the driver budget build DISTRIBUTED: existing
-    // bitsets never round-trip the driver (guide §5)
-    if (ParquetUtil.dirSizeBytes(s, dir) > distributedBuildMinBytes) {
-      ParquetUtil.recoverInterrupted(s, dir)
-      StateScanMeter.addGuard(s, dir)
-      return addKeysDistributed(s, dir, adds, rebuild)
-    }
+      rebuild: Map[String, () => DataFrame] = Map.empty): Unit =
     readAll(s, dir).foreach { rows0 =>
       var rows = rows0
       var changed = false
-      adds.foreach { case (df, keyCol, name) =>
+      adds.map(_._3).distinct.foreach { name =>
         val nb = assemble(rows, name).getOrElse(
           throw new IllegalArgumentException(
             s"BloomGuard: bitset '$name' was not initialised in $dir"))
-        val delta = buildSharded(df, keyCol, nb.shardBits, nb.bitsPerShard)
-        // a zero delta = the add carried no (non-null) keys — the
+        val keys = adds.collect { case (df, keyCol, `name`) =>
+          df.select(col(keyCol).cast("string").as("__k"))
+        }.reduce(_ unionByName _)
+        val delta = buildSharded(keys, "__k", nb.shardBits, nb.bitsPerShard)
+        // a zero delta = the adds carried no (non-null) keys — the
         // emptiness answer falls out of the build aggregation that runs
         // anyway, so a pure-replay batch costs no extra probe job and
         // swaps nothing
@@ -564,15 +354,15 @@ object BloomGuard {
               // full key set = state keys ∪ this batch's keys (the
               // bloom precedes the appends it covers); one amortized
               // scan — the trigger is geometric in cardinality
-              val keys = rebuild(name)().toDF("__k")
+              val all = rebuild(name)().toDF("__k")
                 .select(col("__k").cast("string").as("__k"))
-                .union(df.select(col(keyCol).cast("string").as("__k")))
+                .union(keys)
                 .where(col("__k").isNotNull)
                 .distinct().localCheckpoint()
-              val (nShards, perShard) = planFor(keys.count())
-              val rb = NamedBloom(buildSharded(keys, "__k",
+              val (nShards, perShard) = planFor(all.count())
+              val rb = NamedBloom(buildSharded(all, "__k",
                 Integer.numberOfTrailingZeros(nShards), perShard))
-              keys.unpersist()
+              all.unpersist()
               rb
             }
           rows = replaceRows(rows, name, grown)
@@ -580,7 +370,6 @@ object BloomGuard {
       }
       if (changed) write(s, dir, rows)
     }
-  }
 
   /** Single-bitset convenience over [[addKeysMulti]]: `stateKeys` is
     * the fold's lazy resize source (its state-table key column).
@@ -646,4 +435,29 @@ object BloomGuard {
       case Some(nb) =>
         df.where(hit(nb, keyCol)).limit(1).count() > 0
     })
+
+  /** The folds' replay guard, one call per batch: the rows of `batch`
+    * whose `keyCol` is not yet in the fold's state, and whether the
+    * exact probe ran to find them. `stateKeys` is the fold's state-key
+    * read — its own reader and [[StateScanMeter]] call, one key column
+    * under any name. It serves both the exact anti-join (run only when
+    * [[needExact]] finds a possible hit) and the resize source of the
+    * [[addKeys]] that then records the fresh keys, BEFORE the fold
+    * appends the rows they cover.
+    *
+    * The exact path cuts its result eagerly: the fold then appends into
+    * the dir this probe read, and a lazy anti-join would re-read that
+    * dir after the append and drop the fold's own new rows.
+    */
+  def freshRows(s: SparkSession, dir: String, batch: DataFrame,
+      keyCol: String, stateKeys: () => DataFrame): (DataFrame, Boolean) = {
+    val exact = needExact(s, dir, batch, keyCol)
+    val fresh =
+      if (!exact) batch
+      else batch.join(stateKeys().toDF(keyCol), Seq(keyCol), "left_anti")
+        .localCheckpoint()
+    addKeys(s, dir, fresh.select(keyCol), keyCol,
+      stateKeys = Some(stateKeys))
+    (fresh, exact)
+  }
 }

@@ -150,15 +150,11 @@ object Bm25 {
     // NgramDiversity recovery-before-watermark window, same analysis)
     graft.io.ParquetUtil.recoverAppend(s, tfDir)
     graft.io.ParquetUtil.recoverAppend(s, dlDir)
-    val bloom = bloomDir(dlDir)
-    val exact = BloomGuard.needExact(s, bloom, b, idCol)
-    val fresh =
-      if (!exact) b
-      else {
+    val (fresh, exact) = BloomGuard.freshRows(s, bloomDir(dlDir), b,
+      idCol, () => {
         StateScanMeter.add(s, dlDir)
-        b.join(s.read.parquet(dlDir).select(idCol), Seq(idCol), "left_anti")
-          .localCheckpoint()
-      }
+        s.read.parquet(dlDir).select(idCol)
+      })
     // empty batch or pure replay (every doc already folded): write
     // NOTHING — no bloom swap, no empty appends; the state dirs are
     // untouched
@@ -176,12 +172,6 @@ object Bm25 {
         tfBatch.join(s.read.parquet(tfDir).select(idCol).distinct(),
           Seq(idCol), "left_anti").localCheckpoint()
       }
-    BloomGuard.addKeys(s, bloom, fresh.select(idCol), idCol,
-      stateKeys = Some(() => {
-        // resize source (amortized: invoked only at fill trigger)
-        StateScanMeter.add(s, dlDir)
-        s.read.parquet(dlDir).select(idCol)
-      }))
     graft.io.ParquetUtil.safeAppend(s, tfNew, tfDir)
     if (crashBetweenAppends) {
       crashBetweenAppends = false

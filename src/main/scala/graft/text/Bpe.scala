@@ -140,7 +140,7 @@ object Bpe {
     * estimated driver bytes) — measured UTF-8 payload + per-row
     * overhead.
     */
-  private[text] def vocabFootprint(proj: DataFrame): (Long, Long) = {
+  private def vocabFootprint(proj: DataFrame): (Long, Long) = {
     val r = proj.agg(count(lit(1)),
       sum(octet_length(col(proj.columns.head)))).collect()(0)
     val rows = r.getLong(0)
@@ -160,21 +160,31 @@ object Bpe {
       spark: SparkSession, words: DataFrame, k: Int,
       wordCol: String = "w", countCol: String = "cnt",
       maxLocalVocab: Long = DefaultMaxLocalVocab,
-      maxLocalBytes: Long = DefaultMaxLocalBytes): Seq[Merge] = {
+      maxLocalBytes: Long = DefaultMaxLocalBytes): Seq[Merge] =
+    gatedTrain(words, wordCol, countCol, maxLocalVocab, maxLocalBytes)(
+      trainMergesLocal(_, k))(
+      trainMergesDistributed(spark, words, k, wordCol, countCol))
+
+  /** The vocab-footprint gate both trainers ([[trainMerges]],
+    * [[WordPiece.trainMerges]]) share: a cheap guard before the
+    * collect, so a pathological vocabulary (not actually vocab-bounded)
+    * OR pathological word LENGTHS (few rows, gigabytes — URL/binary-
+    * shaped tokens) cannot OOM the driver. Under both budgets `local`
+    * runs on the collected (word, count) pairs; otherwise the
+    * bit-parity `distributed` trainer runs. Records [[lastTrainPath]].
+    */
+  private[text] def gatedTrain[A](words: DataFrame, wordCol: String,
+      countCol: String, maxLocalVocab: Long, maxLocalBytes: Long)(
+      local: Seq[(String, Long)] => A)(distributed: => A): A = {
     val proj = words
       .select(col(wordCol).cast("string"), col(countCol).cast("long"))
-    // cheap guard before the collect: a pathological vocabulary (not
-    // actually vocab-bounded) OR pathological word LENGTHS (few rows,
-    // gigabytes — URL/binary-shaped tokens) must not OOM the driver —
-    // fall back to the bit-parity distributed trainer instead
     val (vocabSize, vocabBytes) = vocabFootprint(proj)
     if (vocabSize > maxLocalVocab || vocabBytes > maxLocalBytes) {
       lastTrainPath = "distributed"
-      trainMergesDistributed(spark, words, k, wordCol, countCol)
+      distributed
     } else {
       lastTrainPath = "local"
-      trainMergesLocal(
-        proj.collect().map(r => (r.getString(0), r.getLong(1))).toSeq, k)
+      local(proj.collect().map(r => (r.getString(0), r.getLong(1))).toSeq)
     }
   }
 

@@ -185,19 +185,10 @@ object WordPiece {
       spark: SparkSession, words: DataFrame, k: Int,
       wordCol: String = "w", countCol: String = "cnt",
       maxLocalVocab: Long = Bpe.DefaultMaxLocalVocab,
-      maxLocalBytes: Long = Bpe.DefaultMaxLocalBytes): Seq[Merge] = {
-    val proj = words
-      .select(col(wordCol).cast("string"), col(countCol).cast("long"))
-    val (vocabSize, vocabBytes) = Bpe.vocabFootprint(proj)
-    if (vocabSize > maxLocalVocab || vocabBytes > maxLocalBytes) {
-      Bpe.lastTrainPath = "distributed"
-      trainMergesDistributed(spark, words, k, wordCol, countCol)
-    } else {
-      Bpe.lastTrainPath = "local"
-      trainMergesLocal(
-        proj.collect().map(r => (r.getString(0), r.getLong(1))).toSeq, k)
-    }
-  }
+      maxLocalBytes: Long = Bpe.DefaultMaxLocalBytes): Seq[Merge] =
+    Bpe.gatedTrain(words, wordCol, countCol, maxLocalVocab, maxLocalBytes)(
+      trainMergesLocal(_, k))(
+      trainMergesDistributed(spark, words, k, wordCol, countCol))
 
   /** The corpus's single-character alphabet — driver-collected
     * (bounded by the charset, the k-means-centroid boundedness

@@ -12,6 +12,23 @@ import org.apache.spark.sql.functions._
 class BloomGuardSpec extends SparkSpec {
   import spark.implicits._
 
+  private def tmpDir(tag: String): String =
+    java.nio.file.Files.createTempDirectory(tag).toString + "/bloom"
+
+  /** (name, length, mtime) of every file in `dir` — equal listings mean
+    * nothing was rewritten.
+    */
+  private def listing(dir: String): Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.listStatus(p).map(st =>
+      (st.getPath.getName, st.getLen, st.getModificationTime)).toSeq
+      .sortBy(_._1)
+  }
+
+  private def hits(nb: BloomGuard.NamedBloom, keys: Seq[Long]): Long =
+    keys.toDF("k").where(BloomGuard.hit(nb, "k")).count()
+
   test("read: missing dir is None; addKeys without init is a no-op " +
       "(a late-created bloom would miss pre-existing state keys)") {
     val dir = java.nio.file.Files.createTempDirectory("bg").toString +
@@ -146,60 +163,111 @@ class BloomGuardSpec extends SparkSpec {
 
   test("a pure-replay add (all frames empty) swaps nothing — the " +
       "guard dir's files are untouched") {
-    val dir = java.nio.file.Files.createTempDirectory("bg8").toString +
-      "/bloom"
+    val dir = tmpDir("bg8")
     BloomGuard.init(spark, dir)
     BloomGuard.addKeys(spark, dir, (0L until 50L).toDF("k"), "k")
-    def listing = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      fs.listStatus(p).map(st =>
-        (st.getPath.getName, st.getLen, st.getModificationTime)).toSeq
-        .sortBy(_._1)
-    }
-    val before = listing
+    val before = listing(dir)
     BloomGuard.addKeys(spark, dir, (0L until 50L).toDF("k")
       .where(col("k") < 0), "k")
-    assert(listing === before, "zero-new-key batch must not rewrite")
+    assert(listing(dir) === before, "zero-new-key batch must not rewrite")
   }
 
-  test("distributed build equals the driver OR path bit-for-bit: " +
-      "OR-merge, resize + shard promotion, and replay-writes-nothing") {
-    val savedGate = BloomGuard.distributedBuildMinBytes
+  test("one build path: OR-merge, resize + shard promotion, a " +
+      "post-promotion OR, and a replay that rewrites nothing") {
     val savedShard = BloomGuard.maxShardBits
-    def run(tag: String): Map[String, Array[Long]] = {
-      val dir = java.nio.file.Files.createTempDirectory(tag).toString +
-        "/bloom"
+    try {
+      BloomGuard.maxShardBits = 1 << 17
+      val dir = tmpDir("bgd1")
       BloomGuard.init(spark, dir, numBits = 1024)
       BloomGuard.addKeys(spark, dir, (0L until 100L).toDF("k"), "k")
       // resize + shard promotion (maxShardBits forced small)
       BloomGuard.addKeys(spark, dir, (100L until 200L).toDF("k"), "k",
         stateKeys = Some(() => (0L until 100L).toDF("k")))
+      assert(BloomGuard.read(spark, dir).get.numShards === 16)
       // post-promotion OR-merge
       BloomGuard.addKeys(spark, dir, (200L until 300L).toDF("k"), "k")
       // pure replay: must not change anything
+      val before = listing(dir)
       BloomGuard.addKeys(spark, dir,
         (0L until 10L).toDF("k").where(col("k") < 0), "k")
-      BloomGuard.readAll(spark, dir).get
-    }
-    try {
-      BloomGuard.maxShardBits = 1 << 17
-      BloomGuard.distributedBuildMinBytes = Long.MaxValue
-      val driver = run("bgd1")
-      BloomGuard.distributedBuildMinBytes = -1L
-      val dist = run("bgd2")
-      assert(dist.keySet === driver.keySet)
-      driver.keySet.foreach { n =>
-        assert(java.util.Arrays.equals(dist(n), driver(n)),
-          s"row $n differs between the driver and distributed builds")
-      }
-      val nb = BloomGuard.assemble(dist, "k").get
-      assert((0L until 300L).toDF("k")
-        .where(BloomGuard.hit(nb, "k")).count() === 300L)
-    } finally {
-      BloomGuard.distributedBuildMinBytes = savedGate
-      BloomGuard.maxShardBits = savedShard
-    }
+      assert(listing(dir) === before, "a pure replay must not rewrite")
+      assert(hits(BloomGuard.read(spark, dir).get, 0L until 300L) === 300L)
+    } finally BloomGuard.maxShardBits = savedShard
+  }
+
+  test("same-name adds in one addKeysMulti OR and rebuild as one key " +
+      "set: a rebuild crossed by the second add keeps the first's keys") {
+    val dir = tmpDir("bgsn")
+    BloomGuard.init(spark, dir, numBits = 128)
+    // state keys 0..4 already appended; the batch adds 1000..1001
+    // (the fill stays under the threshold) and then 2000..2099 under
+    // the same name — the second crosses the fill threshold of the
+    // 128-bit bitset and triggers the rebuild
+    BloomGuard.addKeys(spark, dir, (0L until 5L).toDF("k"), "k")
+    BloomGuard.addKeysMulti(spark, dir, Seq(
+        ((1000L until 1002L).toDF("k"), "k", BloomGuard.DefaultName),
+        ((2000L until 2100L).toDF("k"), "k", BloomGuard.DefaultName)),
+      Map(BloomGuard.DefaultName -> (() => (0L until 5L).toDF("k"))))
+    val nb = BloomGuard.read(spark, dir).get
+    assert(nb.totalBits > 128L, "the second add must have rebuilt")
+    val all = (0L until 5L) ++ (1000L until 1002L) ++ (2000L until 2100L)
+    assert(hits(nb, all) === all.size.toLong,
+      "every key of both adds must hit after the rebuild")
+  }
+
+  // ---- the folds' replay guard (BloomGuard.freshRows) on edge inputs --
+
+  /** An initialised guard over a state whose keys are 0..9. */
+  private def guardedState(tag: String)
+      : (String, () => org.apache.spark.sql.DataFrame) = {
+    val dir = tmpDir(tag)
+    val state = (0L until 10L).toDF("id")
+    BloomGuard.init(spark, dir)
+    BloomGuard.addKeys(spark, dir, state, "id")
+    (dir, () => {
+      graft.streaming.StateScanMeter.addBytes(1L)
+      state
+    })
+  }
+
+  test("freshRows: an empty batch returns no rows and leaves the bloom " +
+      "dir unchanged") {
+    val (dir, stateKeys) = guardedState("bgf1")
+    val before = listing(dir)
+    val (fresh, _) = BloomGuard.freshRows(spark, dir,
+      Seq.empty[Long].toDF("doc"), "doc", stateKeys)
+    assert(fresh.isEmpty)
+    assert(listing(dir) === before, "an empty batch must not rewrite")
+  }
+
+  test("freshRows: an all-replay batch runs the exact probe and returns " +
+      "no rows") {
+    val (dir, stateKeys) = guardedState("bgf2")
+    val (fresh, exact) = BloomGuard.freshRows(spark, dir,
+      (0L until 10L).toDF("doc"), "doc", stateKeys)
+    assert(exact, "replayed keys hit the bloom")
+    assert(fresh.count() === 0L)
+  }
+
+  test("freshRows: an all-fresh batch never reads the state") {
+    val (dir, stateKeys) = guardedState("bgf3")
+    graft.streaming.StateScanMeter.reset()
+    val (fresh, exact) = BloomGuard.freshRows(spark, dir,
+      (500000L until 500020L).toDF("doc"), "doc", stateKeys)
+    assert(!exact)
+    assert(fresh.count() === 20L)
+    assert(graft.streaming.StateScanMeter.value === 0L,
+      "neither the anti-join nor a resize may read the state")
+  }
+
+  test("freshRows: a one-row partial replay returns exactly the new key") {
+    val (dir, stateKeys) = guardedState("bgf4")
+    val (fresh, exact) = BloomGuard.freshRows(spark, dir,
+      ((0L until 10L) :+ 77777L).toDF("doc"), "doc", stateKeys)
+    assert(exact)
+    assert(fresh.as[Long].collect().toSeq === Seq(77777L))
+    assert(hits(BloomGuard.read(spark, dir).get, Seq(77777L)) === 1L,
+      "the fresh key is recorded in the bloom")
   }
 
   test("a LOST bloom (deleted dir) degrades to the exact path without " +
