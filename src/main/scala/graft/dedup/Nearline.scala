@@ -40,19 +40,11 @@ object Nearline {
     Dedup.hammingPairs(seed, "doc", "h", maxHamming)
       .withColumn("phase", lit("seed"))
       .write.mode("overwrite").parquet(pairsDir)
-    StreamFlow.writeTimeSplits(
+    val src = StreamFlow.splitSource(
       hashed.where(!seedPred), "doc", nBatches, splitDir)
-    val schema = StructType(Seq(
-      StructField("doc", LongType), StructField("h", LongType)))
-    val q = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(splitDir)
-      .writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        applyBatch(s, b, indexDir, pairsDir, maxHamming)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StreamFlow.drain(src) { (b, _) =>
+      applyBatch(s, b, indexDir, pairsDir, maxHamming)
+    }
     s.read.parquet(pairsDir)
   }
 

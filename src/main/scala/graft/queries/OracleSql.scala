@@ -133,7 +133,7 @@ object OracleSql {
   }
 
   /** Unrolled replay of [[graft.similarity.MiniBatchKMeans]]: points
-    * batch by `vec_id` range exactly as `StreamFlow.writeTimeSplits`
+    * batch by `vec_id` range exactly as `StreamFlow.KeySlices`
     * slices them (step = (hi-lo)//n + 1, last slice open-ended — the
     * LEAST cap), seeds come from batch 0 alone, batch i assigns
     * against c{i-1}, and state s{i} accumulates (sum, count) per

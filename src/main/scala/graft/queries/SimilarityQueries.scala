@@ -2,6 +2,7 @@ package graft.queries
 
 import graft._
 import graft.similarity.VectorFunctions._
+import graft.streaming.StreamFlow
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -618,13 +619,9 @@ object SimilarityQueries {
       val lex = graft.similarity.HybridRrf.lexicalLeg(
         corpus, "doc_id", "text", NumQueries)
       val embV = embT.select(col("vec_id"), col("embedding"))
-      // frozen quantizer from batch 0 — the writeTimeSplits slicing
-      // rule (step = (hi-lo)/3 + 1, floor on non-negatives)
-      val bRow = embV.agg(min(col("vec_id")), max(col("vec_id")))
-        .collect()(0)
-      val (lo, hi) = (bRow.getLong(0), bRow.getLong(1))
-      val step = math.max(1L, (hi - lo) / 3 + 1)
-      val b0 = embV.where(col("vec_id") < lo + step)
+      // frozen quantizer from batch 0 of the stream's key-range slicing
+      val b0 = embV.where(
+        StreamFlow.requireKeySlices(embV, "vec_id", 3).slice(0))
       val k = ivfK(b0.count())
       val (centFp, _) = graft.similarity.KMeans.fitModel(
         b0, "vec_id", "embedding", k, IvfIters)
@@ -658,17 +655,14 @@ object SimilarityQueries {
       val dfl = DataFlow(s, "q_quantizer_drift")
       val emb = src(dfl, "embeddings")
         .select(col("vec_id"), col("embedding"))
-      val bRow = emb.agg(min(col("vec_id")), max(col("vec_id")))
-        .collect()(0)
-      val (lo, hi) = (bRow.getLong(0), bRow.getLong(1))
-      val step = math.max(1L, (hi - lo) / 3 + 1)
-      val b0 = emb.where(col("vec_id") < lo + step)
+      val slices = StreamFlow.requireKeySlices(emb, "vec_id", 3)
+      val b0 = emb.where(slices.slice(0))
       val k = ivfK(b0.count())
       val (centFp, _) = graft.similarity.KMeans.fitModel(
         b0, "vec_id", "embedding", k, IvfIters)
       graft.similarity.QuantizerDrift.withRatios(
         graft.similarity.QuantizerDrift.sliceStats(emb, centFp,
-          expr(s"(vec_id - $lo) div $step")))
+          slices.index))
         .orderBy("slice")
     })
 
@@ -847,7 +841,7 @@ object SimilarityQueries {
     val d1 = graft.similarity.VectorFunctions.Dim + 1
     val scale = graft.similarity.KMeans.Scale
     val offset = graft.similarity.KMeans.Offset
-    // batch 0 of writeTimeSplits' slicing: step = (hi-lo)/3 + 1 (floor,
+    // slice 0 of StreamFlow.KeySlices: step = (hi-lo)/3 + 1 (floor,
     // non-negative operands so Spark's truncation == DuckDB's //)
     val b0Where =
       """vec_id < (SELECT min(vec_id)

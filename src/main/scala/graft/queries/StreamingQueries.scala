@@ -4,7 +4,6 @@ import graft._
 import graft.streaming.StreamFlow
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Streaming query over the `events` table: a watermarked hourly tumbling
   * window per event_type, drained with Trigger.AvailableNow into a memory
@@ -28,7 +27,7 @@ object StreamingQueries {
 
   /** Incremental per-user sessionization of a bounded (user_id, ts_us)
     * frame: split into `nSplits` time-ordered files
-    * ([[StreamFlow.writeTimeSplits]]), drain one file per micro-batch,
+    * ([[StreamFlow.splitSource]]), drain one file per micro-batch,
     * close sessions by inactivity gap or event-time timeout, and complete
     * sessions still open at end-of-source from the state store. Returns
     * (user_id, session_idx, n_events, start_us, end_us) — identical for
@@ -41,11 +40,8 @@ object StreamingQueries {
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val gapUs = gapMinutes * 60L * 1000 * 1000
     val gapMs = gapMinutes * 60L * 1000
-    StreamFlow.writeTimeSplits(batch, "ts_us", nSplits, splitDir)
-    val splitSchema = StructType(Seq(
-      StructField("user_id", LongType), StructField("ts_us", LongType)))
-    val events = s.readStream.schema(splitSchema)
-      .option("maxFilesPerTrigger", "1").parquet(splitDir)
+    val events = StreamFlow.splitSource(
+        batch.select("user_id", "ts_us"), "ts_us", nSplits, splitDir)
       .withColumn("ts", timestamp_micros(col("ts_us")))
       .withWatermark("ts", "10 minutes")
       .as[(Long, Long, java.sql.Timestamp)]
@@ -119,7 +115,8 @@ object StreamingQueries {
       .select(col("user_id"), col("event_id"), col("event_type"),
         eventsTsUs(s, dir).as("ts_us"))
     val splitDir = tmpDir("graft_sjo_split") + "/splits"
-    StreamFlow.writeTimeSplits(batch, "ts_us", 3, splitDir)
+    val ev = StreamFlow.splitSource(batch, "ts_us", 3, splitDir)
+      .withColumn("tsm", timestamp_micros(col("ts_us")))
     val hiUs = batch.agg(max(col("ts_us"))).collect()(0).getLong(0)
     val dayUs = 86400L * 1000000L
     import s.implicits._
@@ -128,13 +125,6 @@ object StreamingQueries {
       .toDF("user_id", "event_id", "event_type", "ts_us")
     StreamFlow.appendSplit(sentinel(hiUs + 10 * dayUs), splitDir, 3)
     StreamFlow.appendSplit(sentinel(hiUs + 20 * dayUs), splitDir, 4)
-    val splitSchema = StructType(Seq(
-      StructField("user_id", LongType), StructField("event_id", LongType),
-      StructField("event_type", StringType),
-      StructField("ts_us", LongType)))
-    val ev = s.readStream.schema(splitSchema)
-      .option("maxFilesPerTrigger", "1").parquet(splitDir)
-      .withColumn("tsm", timestamp_micros(col("ts_us")))
     val clicks = ev.where(col("event_type") === "click")
       .select(col("user_id"), col("event_id").as("click_id"),
         col("tsm").as("ct"))
@@ -236,7 +226,7 @@ object StreamingQueries {
     // stateful streaming: per-user sessionization via
     // flatMapGroupsWithState (30-minute inactivity gap), INCREMENTAL:
     // the bounded source is split into three time-ordered files and
-    // drained with maxFilesPerTrigger=1, so sessions genuinely span
+    // drained one file per micro-batch, so sessions genuinely span
     // micro-batches. Event-time timeouts flush a session once the
     // watermark passes its gap; sessions still open when the source runs
     // dry are completed from the state store (Spark 4's `statestore`
@@ -248,7 +238,7 @@ object StreamingQueries {
       val batch = s.read.schema(EventsSchema).parquet(s"$dir/events.parquet")
         .select(col("user_id"), eventsTsUs(s, dir).as("ts_us"))
       // fresh staging dir per run: no cross-session/checkout races on a
-      // shared path, and writeTimeSplits' delete can't hit live readers
+      // shared path, and the split writer's delete can't hit live readers
       val splitDir = tmpDir("graft_sess_split") + "/splits"
       sessionize(s, batch, splitDir, nSplits = 3,
         name = "q_stream_sessionize").select(
@@ -389,32 +379,21 @@ object StreamingQueries {
         val base = tmpDir("graft_upsert")
         val splitDir = base + "/splits"
         val target = base + "/bse_event_totals"
-        StreamFlow.writeTimeSplits(batch, "ts_us", 3, splitDir)
-        val splitSchema = StructType(Seq(
-          StructField("event_type", StringType),
-          StructField("value", DoubleType),
-          StructField("ts_us", LongType)))
-        val agg = s.readStream.schema(splitSchema)
-          .option("maxFilesPerTrigger", "1").parquet(splitDir)
+        val agg = StreamFlow.splitSource(batch, "ts_us", 3, splitDir)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n_events"),
             sum(col("value").cast("decimal(28,2)")).as("__tv"))
-        val q = agg.writeStream
-          .outputMode("update")
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            val fs = new org.apache.hadoop.fs.Path(target)
-              .getFileSystem(s.sessionState.newHadoopConf())
-            val merged =
-              if (!fs.exists(new org.apache.hadoop.fs.Path(target))) b
-              else s.read.parquet(target)
-                .join(b.select("event_type"), Seq("event_type"),
-                  "left_anti")
-                .unionByName(b)
-            graft.io.ParquetUtil.safeOverwrite(s, merged, target)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        StreamFlow.drain(agg, outputMode = "update") { (b, _) =>
+          val fs = new org.apache.hadoop.fs.Path(target)
+            .getFileSystem(s.sessionState.newHadoopConf())
+          val merged =
+            if (!fs.exists(new org.apache.hadoop.fs.Path(target))) b
+            else s.read.parquet(target)
+              .join(b.select("event_type"), Seq("event_type"),
+                "left_anti")
+              .unionByName(b)
+          graft.io.ParquetUtil.safeOverwrite(s, merged, target)
+        }
         s.read.parquet(target)
           .select(col("event_type"), col("n_events"),
             col("__tv").cast("double").as("total_value"))
@@ -444,29 +423,24 @@ object StreamingQueries {
         // state is written at width 4 — micro-batch sinks accrete small
         // files by nature; the compaction below is the maintenance verb
         // that pays that debt back.
-        def drain(splitDir: String, schema: StructType,
-            applyOps: Boolean): Unit = {
-          val q = s.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(splitDir)
-            .writeStream.outputMode("append")
-            .foreachBatch { (b: DataFrame, _: Long) =>
-              val fs = new org.apache.hadoop.fs.Path(target)
-                .getFileSystem(s.sessionState.newHadoopConf())
-              val ups = (if (applyOps)
-                b.where(col(DeltaLoad.OpCol) =!= "DELETE") else b)
-                .select(cols.map(col): _*)
-              val merged =
-                if (!fs.exists(new org.apache.hadoop.fs.Path(target))) ups
-                else s.read.parquet(target)
-                  .join(b.select("n_nationkey"), Seq("n_nationkey"),
-                    "left_anti")
-                  .unionByName(ups)
-              graft.io.ParquetUtil.safeOverwrite(
-                s, merged.repartition(4), target)
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+        def load(df: DataFrame, splitDir: String, applyOps: Boolean)
+            : Unit = {
+          val src = StreamFlow.splitSource(df, "n_nationkey", 3, splitDir)
+          StreamFlow.drain(src) { (b, _) =>
+            val fs = new org.apache.hadoop.fs.Path(target)
+              .getFileSystem(s.sessionState.newHadoopConf())
+            val ups = (if (applyOps)
+              b.where(col(DeltaLoad.OpCol) =!= "DELETE") else b)
+              .select(cols.map(col): _*)
+            val merged =
+              if (!fs.exists(new org.apache.hadoop.fs.Path(target))) ups
+              else s.read.parquet(target)
+                .join(b.select("n_nationkey"), Seq("n_nationkey"),
+                  "left_anti")
+                .unionByName(ups)
+            graft.io.ParquetUtil.safeOverwrite(
+              s, merged.repartition(4), target)
+          }
         }
         // LOAD 1: bulk extract v1 into EXT (audit-stamped), stream it
         // into BSE in 3 micro-batches
@@ -477,12 +451,7 @@ object StreamingQueries {
         def keyed(df: DataFrame): DataFrame = df.select(
           col("n_nationkey").cast("long").as("n_nationkey"), col("n_name"),
           col("n_regionkey").cast("long").as("n_regionkey"))
-        val splits1 = s"${c.warehousePath}/splits1"
-        StreamFlow.writeTimeSplits(keyed(v1), "n_nationkey", 3, splits1)
-        drain(splits1, StructType(Seq(
-          StructField("n_nationkey", LongType),
-          StructField("n_name", StringType),
-          StructField("n_regionkey", LongType))), applyOps = false)
+        load(keyed(v1), s"${c.warehousePath}/splits1", applyOps = false)
         // source drifts to v2: updates (%5=1), deletes (%7=3),
         // inserts (+100 for %6=0) — q_delta_extract's drift shape
         val v2dir = s"${c.warehousePath}/v2src"
@@ -505,13 +474,7 @@ object StreamingQueries {
             col("n_name"), col("n_regionkey").cast("long").as("n_regionkey"),
             col(DeltaLoad.OpCol))
         // LOAD 2: stream the delta slices, applying ops per batch
-        val splits2 = s"${c.warehousePath}/splits2"
-        StreamFlow.writeTimeSplits(delta, "n_nationkey", 3, splits2)
-        drain(splits2, StructType(Seq(
-          StructField("n_nationkey", LongType),
-          StructField("n_name", StringType),
-          StructField("n_regionkey", LongType),
-          StructField(DeltaLoad.OpCol, StringType))), applyOps = true)
+        load(delta, s"${c.warehousePath}/splits2", applyOps = true)
         // COMPACT: the upsert sink's 4-file writes collapse to 1; data
         // must be untouched (the oracle checks the final state)
         val (before, after) =
@@ -593,35 +556,22 @@ object StreamingQueries {
             .withColumn("c_acctbal",
               when(col("c_custkey") % 3 === 0, col("c_acctbal") * 3)
                 .otherwise(col("c_acctbal"))))
-        val splitDir = s"${c.warehousePath}/snap_splits"
-        StreamFlow.writeTimeSplits(
+        val src = StreamFlow.splitSource(
           snaps.map { case (i, df) => df.withColumn("snap_seq", lit(i)) }
             .reduce(_ unionByName _),
-          "snap_seq", 3, splitDir)
+          "snap_seq", 3, s"${c.warehousePath}/snap_splits")
         val lodPath = c.tablePath(Layer.LOD, spec.name)
-        val splitSchema = StructType(Seq(
-          StructField("c_custkey", LongType),
-          StructField("c_name", StringType),
-          StructField("c_acctbal", DoubleType),
-          StructField("snap_seq", LongType)))
-        val q = s.readStream.schema(splitSchema)
-          .option("maxFilesPerTrigger", "1").parquet(splitDir)
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            // one split file per trigger = one snapshot per batch; the
-            // distinct-seq loop is defensive against file coalescing
-            val seqs = b.select("snap_seq").distinct()
-              .collect().map(_.getLong(0)).sorted
-            seqs.foreach { i =>
-              b.where(col("snap_seq") === i).drop("snap_seq")
-                .write.mode("overwrite").parquet(lodPath)
-              Scd2Load.load(s, c, spec, dates(i), initial = i == 1L)
-              ()
-            }
+        StreamFlow.drain(src) { (b, _) =>
+          // one split file per trigger = one snapshot per batch; the
+          // distinct-seq loop is defensive against file coalescing
+          val seqs = b.select("snap_seq").distinct()
+            .collect().map(_.getLong(0)).sorted
+          seqs.foreach { i =>
+            b.where(col("snap_seq") === i).drop("snap_seq")
+              .write.mode("overwrite").parquet(lodPath)
+            Scd2Load.load(s, c, spec, dates(i), initial = i == 1L)
           }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        }
         s.read.parquet(c.tablePath(Layer.BSE, spec.name))
           .select(col("sk_customer"), col("c_custkey"), col("c_name"),
             col("c_acctbal"),
@@ -669,25 +619,17 @@ object StreamingQueries {
           .parquet(s"$dir/events.parquet").select("event_id")
         val base = tmpDir("graft_shll")
         val regsDir = base + "/registers"
-        StreamFlow.writeTimeSplits(ev, "event_id", 4, base + "/splits")
-        val schema = StructType(Seq(StructField("event_id", LongType)))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(base + "/splits")
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            val regs = HllSketch.registers(s, b, "event_id")
-            val fs = new org.apache.hadoop.fs.Path(regsDir)
-              .getFileSystem(s.sessionState.newHadoopConf())
-            val merged =
-              if (!fs.exists(new org.apache.hadoop.fs.Path(regsDir))) regs
-              else HllSketch.mergeRegisters(
-                s.read.parquet(regsDir), regs)
-            graft.io.ParquetUtil.safeOverwrite(s, merged, regsDir)
-            ()
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val src = StreamFlow.splitSource(ev, "event_id", 4, base + "/splits")
+        StreamFlow.drain(src) { (b, _) =>
+          val regs = HllSketch.registers(s, b, "event_id")
+          val fs = new org.apache.hadoop.fs.Path(regsDir)
+            .getFileSystem(s.sessionState.newHadoopConf())
+          val merged =
+            if (!fs.exists(new org.apache.hadoop.fs.Path(regsDir))) regs
+            else HllSketch.mergeRegisters(
+              s.read.parquet(regsDir), regs)
+          graft.io.ParquetUtil.safeOverwrite(s, merged, regsDir)
+        }
         HllSketch.estimate(s.read.parquet(regsDir))
           .crossJoin(ev.agg(
             count_distinct(col("event_id")).as("exact_distinct")))
@@ -713,21 +655,11 @@ object StreamingQueries {
         val train = docs.where(col("doc_id") % 2 === 0)
         val base = tmpDir("graft_snb")
         val stateDir = base + "/state"
-        StreamFlow.writeTimeSplits(train, "doc_id", 3, base + "/splits")
-        val schema = StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("text", StringType),
-          StructField("lang", StringType)))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(base + "/splits")
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            graft.text.NaiveBayes.applyBatch(s, b, "doc_id", "text",
-              col("lang") === "en", id, stateDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val src = StreamFlow.splitSource(train, "doc_id", 3, base + "/splits")
+        StreamFlow.drain(src) { (b, id) =>
+          graft.text.NaiveBayes.applyBatch(s, b, "doc_id", "text",
+            col("lang") === "en", id, stateDir)
+        }
         graft.text.NaiveBayes.scoreFromState(s, docs, "doc_id", "text",
           stateDir)
           .orderBy("doc_id")
@@ -742,22 +674,13 @@ object StreamingQueries {
           .select(col("doc_id"), col("text"))
         val base = tmpDir("graft_scms")
         val stateDir = base + "/state"
-        StreamFlow.writeTimeSplits(docs, "doc_id", 3, base + "/splits")
-        val schema = StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("text", StringType)))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(base + "/splits")
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            CountMinSketch.applyBatch(s,
-              b.select(
-                explode(TextFunctions.tokens(col("text"))).as("term")),
-              "term", id, stateDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val src = StreamFlow.splitSource(docs, "doc_id", 3, base + "/splits")
+        StreamFlow.drain(src) { (b, id) =>
+          CountMinSketch.applyBatch(s,
+            b.select(
+              explode(TextFunctions.tokens(col("text"))).as("term")),
+            "term", id, stateDir)
+        }
         val sk = s.read.parquet(stateDir).drop("last_batch")
         val toks = docs
           .select(explode(TextFunctions.tokens(col("text"))).as("term"))
@@ -792,20 +715,10 @@ object StreamingQueries {
           .select(col("doc_id"), col("source"), col("text"))
         val base = tmpDir("graft_sndiv")
         val stateDir = base + "/gram_state"
-        StreamFlow.writeTimeSplits(docs, "doc_id", 3, base + "/splits")
-        val schema = StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("source", StringType),
-          StructField("text", StringType)))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(base + "/splits")
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            NgramDiversity.applyBatch(s, b, id, stateDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val src = StreamFlow.splitSource(docs, "doc_id", 3, base + "/splits")
+        StreamFlow.drain(src) { (b, id) =>
+          NgramDiversity.applyBatch(s, b, id, stateDir)
+        }
         NgramDiversity.diversityFromState(s, stateDir)
           .orderBy("source", "n")
       }
@@ -822,20 +735,11 @@ object StreamingQueries {
           .select(col("doc_id"), col("text"))
         val base = tmpDir("graft_sdex")
         val stateDir = base + "/fp_state"
-        StreamFlow.writeTimeSplits(docs, "doc_id", 3, base + "/splits")
-        val schema = StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("text", StringType)))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(base + "/splits")
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            graft.dedup.Nearline.applyExactBatch(
-              s, b, "text", "doc_id", id, stateDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val src = StreamFlow.splitSource(docs, "doc_id", 3, base + "/splits")
+        StreamFlow.drain(src) { (b, id) =>
+          graft.dedup.Nearline.applyExactBatch(
+            s, b, "text", "doc_id", id, stateDir)
+        }
         graft.dedup.Nearline.exactFromState(s, stateDir)
           .orderBy("keep_id")
       }
@@ -859,21 +763,10 @@ object StreamingQueries {
         val indexDir = base + "/line_index"
         val marksDir = base + "/line_marks"
         LineDedup.initLineState(s, indexDir, marksDir)
-        StreamFlow.writeTimeSplits(lines, "lid", 3, base + "/splits")
-        val schema = StructType(Seq(
-          StructField("page_id", LongType),
-          StructField("line_no", LongType),
-          StructField("line", StringType),
-          StructField("lid", LongType)))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(base + "/splits")
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            LineDedup.applyLineBatch(s, b.drop("lid"), indexDir, marksDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val src = StreamFlow.splitSource(lines, "lid", 3, base + "/splits")
+        StreamFlow.drain(src) { (b, _) =>
+          LineDedup.applyLineBatch(s, b.drop("lid"), indexDir, marksDir)
+        }
         LineDedup.lineDedupFromState(s, lines.drop("lid"), marksDir)
           .orderBy("page_id")
       }
@@ -888,19 +781,10 @@ object StreamingQueries {
         val indexDir = base + "/gram_index"
         val dupDir = base + "/dup_occ"
         SpanDedup.initState(s, indexDir, dupDir)
-        StreamFlow.writeTimeSplits(docs, "doc_id", 3, base + "/splits")
-        val schema = StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("text", StringType)))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(base + "/splits")
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            SpanDedup.applyBatch(s, b, "text", "doc_id", indexDir, dupDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val src = StreamFlow.splitSource(docs, "doc_id", 3, base + "/splits")
+        StreamFlow.drain(src) { (b, _) =>
+          SpanDedup.applyBatch(s, b, "text", "doc_id", indexDir, dupDir)
+        }
         SpanDedup.statsFromState(s, docs, "text", "doc_id", dupDir)
           .orderBy("doc_id")
       }
@@ -918,21 +802,11 @@ object StreamingQueries {
           .select(col("doc_id"), col("text"), col("lang"))
         val base = tmpDir("graft_sdsir")
         val stateDir = base + "/state"
-        StreamFlow.writeTimeSplits(docs, "doc_id", 3, base + "/splits")
-        val schema = StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("text", StringType),
-          StructField("lang", StringType)))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(base + "/splits")
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            Dsir.applyBatch(s, b, "doc_id", "text",
-              col("lang") === "en", id, stateDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val src = StreamFlow.splitSource(docs, "doc_id", 3, base + "/splits")
+        StreamFlow.drain(src) { (b, id) =>
+          Dsir.applyBatch(s, b, "doc_id", "text",
+            col("lang") === "en", id, stateDir)
+        }
         Dsir.weightsFromState(s, docs, "doc_id", "text",
           col("lang") === "en", stateDir).orderBy("doc_id")
       }
@@ -959,20 +833,11 @@ object StreamingQueries {
           tokenCount(col("text")).cast("long").as("n_tokens"))
         val base = tmpDir("graft_sbud")
         val stateDir = base + "/state"
-        StreamFlow.writeTimeSplits(docs, "doc_id", 3, base + "/splits")
-        val schema = StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("text", StringType)))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(base + "/splits")
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            BudgetSelect.applyBatch(s, scored(b), "quality_score",
-              "n_tokens", id, stateDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val src = StreamFlow.splitSource(docs, "doc_id", 3, base + "/splits")
+        StreamFlow.drain(src) { (b, id) =>
+          BudgetSelect.applyBatch(s, scored(b), "quality_score",
+            "n_tokens", id, stateDir)
+        }
         BudgetSelect.selectFromState(s, scored(docs), "quality_score",
           TextQueries.BudgetFrac, stateDir)
           .orderBy("doc_id")
@@ -996,20 +861,11 @@ object StreamingQueries {
         val train = docs.where(col("doc_id") % 2 === 0)
         val base = tmpDir("graft_slm")
         val stateDir = base + "/state"
-        StreamFlow.writeTimeSplits(train, "doc_id", 3, base + "/splits")
-        val schema = StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("text", StringType)))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(base + "/splits")
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            graft.text.BigramLm.applyBatch(s, b, "doc_id", "text", id,
-              stateDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val src = StreamFlow.splitSource(train, "doc_id", 3, base + "/splits")
+        StreamFlow.drain(src) { (b, id) =>
+          graft.text.BigramLm.applyBatch(s, b, "doc_id", "text", id,
+            stateDir)
+        }
         graft.text.BigramLm.scoreFromState(s, docs, "doc_id", "text",
           stateDir)
           .orderBy("doc_id")
@@ -1034,21 +890,12 @@ object StreamingQueries {
         val (indexDir, storeDir, pairsDir) =
           (base + "/band_index", base + "/shingle_store", base + "/pairs")
         Nearline.initMinHashState(s, indexDir, storeDir, pairsDir)
-        StreamFlow.writeTimeSplits(shingled, "doc", 3, base + "/splits")
-        val schema = StructType(Seq(
-          StructField("doc", LongType),
-          StructField("s", ArrayType(StringType))))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(base + "/splits")
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            Nearline.applyMinHashBatch(s, b,
-              threshold = DedupQueries.JaccardThreshold,
-              indexDir, storeDir, pairsDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val src = StreamFlow.splitSource(shingled, "doc", 3, base + "/splits")
+        StreamFlow.drain(src) { (b, _) =>
+          Nearline.applyMinHashBatch(s, b,
+            threshold = DedupQueries.JaccardThreshold,
+            indexDir, storeDir, pairsDir)
+        }
         s.read.parquet(pairsDir)
           .select(col("doc_a").as("doc_a"), col("doc_b").as("doc_b"),
             col("jaccard"))
@@ -1082,21 +929,12 @@ object StreamingQueries {
             base + "/remap")
         IncrementalCC.initState(s, indexDir, pairsDir, labelsDir,
           remapDir)
-        StreamFlow.writeTimeSplits(shingled, "doc", 3, base + "/splits")
-        val schema = StructType(Seq(
-          StructField("doc", LongType),
-          StructField("s", ArrayType(StringType))))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(base + "/splits")
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            IncrementalCC.applyBatch(s, b,
-              DedupQueries.JaccardThreshold,
-              indexDir, pairsDir, labelsDir, remapDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val src = StreamFlow.splitSource(shingled, "doc", 3, base + "/splits")
+        StreamFlow.drain(src) { (b, _) =>
+          IncrementalCC.applyBatch(s, b,
+            DedupQueries.JaccardThreshold,
+            indexDir, pairsDir, labelsDir, remapDir)
+        }
         IncrementalCC.annotateFromState(s, labelsDir, remapDir)
           .orderBy("doc_id")
       }
@@ -1119,20 +957,10 @@ object StreamingQueries {
         val sumsDir = base + "/sums"
         val postingsDir = base + "/postings"
         StreamingIvf.initState(s, postingsDir)
-        StreamFlow.writeTimeSplits(emb, "vec_id", 3, base + "/splits")
-        val schema = StructType(Seq(
-          StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType)),
-          StructField("label", IntegerType)))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(base + "/splits")
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            StreamingIvf.applyBatch(s, b, id, sumsDir, postingsDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val src = StreamFlow.splitSource(emb, "vec_id", 3, base + "/splits")
+        StreamFlow.drain(src) { (b, id) =>
+          StreamingIvf.applyBatch(s, b, id, sumsDir, postingsDir)
+        }
         SimilarityQueries.ivfSearch(s, s.read.parquet(postingsDir),
           SimilarityQueries.centroidsOf(
             StreamingIvf.centroidFrame(s, sumsDir)))
@@ -1164,30 +992,21 @@ object StreamingQueries {
         val base = tmpDir("graft_sxmod")
         val stateDir = base + "/mv_state"
         Crossmodal.initState(s, stateDir)
-        StreamFlow.writeTimeSplits(docs, "doc_id", 3, base + "/splits")
-        val schema = StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("text", StringType)))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(base + "/splits")
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            val wav = udf((id: Long) => MediaCodecs.Synthetic.wavFor(id))
-            val packed = b.select(col("doc_id"), struct(
-              wav(col("doc_id")).as("data"),
-              lit("audio/wav").as("mime"),
-              lit(null).cast("int").as("width"),
-              lit(null).cast("int").as("height"),
-              lit(null).cast("int").as("duration_ms")).as("media"))
-            val proj = Multimodal.featurize(packed, "media", "feat",
-              MediaCodecs.WavEnergyKernel)
-              .select(col("doc_id"),
-                Crossmodal.projectMedia(col("feat")).as("mv"))
-            Crossmodal.applyBatch(s, proj, stateDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val src = StreamFlow.splitSource(docs, "doc_id", 3, base + "/splits")
+        StreamFlow.drain(src) { (b, _) =>
+          val wav = udf((id: Long) => MediaCodecs.Synthetic.wavFor(id))
+          val packed = b.select(col("doc_id"), struct(
+            wav(col("doc_id")).as("data"),
+            lit("audio/wav").as("mime"),
+            lit(null).cast("int").as("width"),
+            lit(null).cast("int").as("height"),
+            lit(null).cast("int").as("duration_ms")).as("media"))
+          val proj = Multimodal.featurize(packed, "media", "feat",
+            MediaCodecs.WavEnergyKernel)
+            .select(col("doc_id"),
+              Crossmodal.projectMedia(col("feat")).as("mv"))
+          Crossmodal.applyBatch(s, proj, stateDir)
+        }
         // text-side queries as literals + the batch ranking tail
         val qRows = docs.where(col("doc_id") < MultimodalQueries.NumQueries)
           .select(col("doc_id"), Crossmodal.projectText(
@@ -1227,20 +1046,11 @@ object StreamingQueries {
         val base = tmpDir("graft_sbm25")
         val (dlDir, tfDir) = (base + "/dl", base + "/tf")
         Bm25.initState(s, "doc_id", dlDir, tfDir)
-        StreamFlow.writeTimeSplits(docs, "doc_id", 3, base + "/splits")
-        val schema = StructType(Seq(
-          StructField("doc_id", LongType),
-          StructField("text", StringType)))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(base + "/splits")
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            Bm25.applyBatch(s, b, "doc_id", "text",
-              TextQueries.Bm25Terms, dlDir, tfDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val src = StreamFlow.splitSource(docs, "doc_id", 3, base + "/splits")
+        StreamFlow.drain(src) { (b, _) =>
+          Bm25.applyBatch(s, b, "doc_id", "text",
+            TextQueries.Bm25Terms, dlDir, tfDir)
+        }
         Bm25.topKFromState(s, "doc_id", dlDir, tfDir, k = 15)
       }
     },
@@ -1257,29 +1067,16 @@ object StreamingQueries {
           .select(col("vec_id"), col("embedding"))
         val base = tmpDir("graft_sqdrift")
         val stateDir = base + "/drift_state"
-        StreamFlow.writeTimeSplits(emb, "vec_id", 3, base + "/splits")
-        // frozen quantizer from batch 0 — the same id-range rule the
-        // splits use (step = (hi-lo)/3 + 1, floor on non-negatives)
-        val bRow = emb.agg(min(col("vec_id")), max(col("vec_id")))
-          .collect()(0)
-        val (lo, hi) = (bRow.getLong(0), bRow.getLong(1))
-        val step = math.max(1L, (hi - lo) / 3 + 1)
-        val b0 = emb.where(col("vec_id") < lo + step)
+        val src = StreamFlow.splitSource(emb, "vec_id", 3, base + "/splits")
+        // frozen quantizer from batch 0: slice 0 of the splits' key ranges
+        val b0 = emb.where(
+          StreamFlow.requireKeySlices(emb, "vec_id", 3).slice(0))
         val k = SimilarityQueries.ivfK(b0.count())
         val (centFp, _) = KMeans.fitModel(
           b0, "vec_id", "embedding", k, SimilarityQueries.IvfIters)
-        val schema = StructType(Seq(
-          StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType))))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(base + "/splits")
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            QuantizerDrift.applyBatch(s, b, centFp, id, stateDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        StreamFlow.drain(src) { (b, id) =>
+          QuantizerDrift.applyBatch(s, b, centFp, id, stateDir)
+        }
         QuantizerDrift.driftFromState(s, stateDir).orderBy("slice")
       }
     },
@@ -1292,29 +1089,16 @@ object StreamingQueries {
         val base = tmpDir("graft_sivft")
         val postingsDir = base + "/postings"
         StreamingIvf.initState(s, postingsDir)
-        StreamFlow.writeTimeSplits(emb, "vec_id", 3, base + "/splits")
-        // frozen quantizer from batch 0 — the same id-range rule the
-        // splits use (step = (hi-lo)/3 + 1, floor on non-negatives)
-        val bRow = emb.agg(min(col("vec_id")), max(col("vec_id")))
-          .collect()(0)
-        val (lo, hi) = (bRow.getLong(0), bRow.getLong(1))
-        val step = math.max(1L, (hi - lo) / 3 + 1)
-        val b0 = emb.where(col("vec_id") < lo + step)
+        val src = StreamFlow.splitSource(emb, "vec_id", 3, base + "/splits")
+        // frozen quantizer from batch 0: slice 0 of the splits' key ranges
+        val b0 = emb.where(
+          StreamFlow.requireKeySlices(emb, "vec_id", 3).slice(0))
         val k = SimilarityQueries.ivfK(b0.count())
         val (centFp, _) = KMeans.fitModel(
           b0, "vec_id", "embedding", k, SimilarityQueries.IvfIters)
-        val schema = StructType(Seq(
-          StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType))))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(base + "/splits")
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            StreamingIvf.applyFrozenBatch(s, b, centFp, postingsDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        StreamFlow.drain(src) { (b, _) =>
+          StreamingIvf.applyFrozenBatch(s, b, centFp, postingsDir)
+        }
         SimilarityQueries.ivfSearch(s, s.read.parquet(postingsDir),
           SimilarityQueries.trainedCentroids(centFp),
           SimilarityQueries.ivfNProbe(k))
@@ -1342,28 +1126,16 @@ object StreamingQueries {
         val postingsDir = base + "/postings"
         val driftDir = base + "/drift"
         StreamingIvf.initState(s, postingsDir)
-        StreamFlow.writeTimeSplits(emb, "vec_id", 3, base + "/splits")
-        val bRow = emb.agg(min(col("vec_id")), max(col("vec_id")))
-          .collect()(0)
-        val (lo, hi) = (bRow.getLong(0), bRow.getLong(1))
-        val step = math.max(1L, (hi - lo) / 3 + 1)
-        val b0 = emb.where(col("vec_id") < lo + step)
+        val src = StreamFlow.splitSource(emb, "vec_id", 3, base + "/splits")
+        val b0 = emb.where(
+          StreamFlow.requireKeySlices(emb, "vec_id", 3).slice(0))
         val kBoot = SimilarityQueries.ivfK(b0.count())
         val (centBoot, _) = KMeans.fitModel(
           b0, "vec_id", "embedding", kBoot, SimilarityQueries.IvfIters)
-        val schema = StructType(Seq(
-          StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType))))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(base + "/splits")
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            StreamingIvf.applyFrozenBatch(s, b, centBoot, postingsDir)
-            QuantizerDrift.applyBatch(s, b, centBoot, id, driftDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        StreamFlow.drain(src) { (b, id) =>
+          StreamingIvf.applyFrozenBatch(s, b, centBoot, postingsDir)
+          QuantizerDrift.applyBatch(s, b, centBoot, id, driftDir)
+        }
         val kFull = SimilarityQueries.ivfK(
           s.read.parquet(postingsDir).count())
         val centNew = StreamingIvf.requantizeIfDrifted(s, driftDir,
@@ -1396,28 +1168,16 @@ object StreamingQueries {
         val postingsDir = base + "/postings"
         val driftDir = base + "/drift"
         StreamingIvf.initState(s, postingsDir)
-        StreamFlow.writeTimeSplits(emb, "vec_id", 3, base + "/splits")
-        val bRow = emb.agg(min(col("vec_id")), max(col("vec_id")))
-          .collect()(0)
-        val (lo, hi) = (bRow.getLong(0), bRow.getLong(1))
-        val step = math.max(1L, (hi - lo) / 3 + 1)
-        val b0 = emb.where(col("vec_id") < lo + step)
+        val src = StreamFlow.splitSource(emb, "vec_id", 3, base + "/splits")
+        val b0 = emb.where(
+          StreamFlow.requireKeySlices(emb, "vec_id", 3).slice(0))
         val kBoot = SimilarityQueries.ivfK(b0.count())
         val (centBoot, _) = KMeans.fitModel(
           b0, "vec_id", "embedding", kBoot, SimilarityQueries.IvfIters)
-        val schema = StructType(Seq(
-          StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType))))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(base + "/splits")
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, id: Long) =>
-            StreamingIvf.applyFrozenBatch(s, b, centBoot, postingsDir)
-            QuantizerDrift.applyBatch(s, b, centBoot, id, driftDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        StreamFlow.drain(src) { (b, id) =>
+          StreamingIvf.applyFrozenBatch(s, b, centBoot, postingsDir)
+          QuantizerDrift.applyBatch(s, b, centBoot, id, driftDir)
+        }
         val centNew = StreamingIvf.splitIfImbalanced(s, driftDir,
           postingsDir, centBoot, targetK = kBoot + 1,
           iterations = SimilarityQueries.IvfIters, threshold = 0.0,
@@ -1444,27 +1204,14 @@ object StreamingQueries {
         val base = tmpDir("graft_spq")
         val postingsDir = base + "/postings"
         StreamingPq.initState(s, postingsDir)
-        StreamFlow.writeTimeSplits(emb, "vec_id", 3, base + "/splits")
-        // frozen books from batch 0 — the same id-range rule the
-        // splits use (step = (hi-lo)/3 + 1, floor on non-negatives)
-        val bRow = emb.agg(min(col("vec_id")), max(col("vec_id")))
-          .collect()(0)
-        val (lo, hi) = (bRow.getLong(0), bRow.getLong(1))
-        val step = math.max(1L, (hi - lo) / 3 + 1)
-        val books = ProductQuantizer.trainBooks(
-          emb.where(col("vec_id") < lo + step), "vec_id", "embedding")
-        val schema = StructType(Seq(
-          StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType))))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(base + "/splits")
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            StreamingPq.applyFrozenBatch(s, b, books, postingsDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val src = StreamFlow.splitSource(emb, "vec_id", 3, base + "/splits")
+        // frozen books from batch 0: slice 0 of the splits' key ranges
+        val b0 = emb.where(
+          StreamFlow.requireKeySlices(emb, "vec_id", 3).slice(0))
+        val books = ProductQuantizer.trainBooks(b0, "vec_id", "embedding")
+        StreamFlow.drain(src) { (b, _) =>
+          StreamingPq.applyFrozenBatch(s, b, books, postingsDir)
+        }
         SimilarityQueries.pqSearchFromPostings(
           s, s.read.parquet(postingsDir), books)
       }
@@ -1488,30 +1235,17 @@ object StreamingQueries {
         val base = tmpDir("graft_sivfpq")
         val postingsDir = base + "/postings"
         StreamingIvfPq.initState(s, postingsDir)
-        StreamFlow.writeTimeSplits(emb, "vec_id", 3, base + "/splits")
-        // frozen models from batch 0 — the same id-range rule the
-        // splits use (step = (hi-lo)/3 + 1, floor on non-negatives)
-        val bRow = emb.agg(min(col("vec_id")), max(col("vec_id")))
-          .collect()(0)
-        val (lo, hi) = (bRow.getLong(0), bRow.getLong(1))
-        val step = math.max(1L, (hi - lo) / 3 + 1)
-        val b0 = emb.where(col("vec_id") < lo + step)
+        val src = StreamFlow.splitSource(emb, "vec_id", 3, base + "/splits")
+        // frozen models from batch 0: slice 0 of the splits' key ranges
+        val b0 = emb.where(
+          StreamFlow.requireKeySlices(emb, "vec_id", 3).slice(0))
         val k = SimilarityQueries.ivfK(b0.count())
         val (centFp, _) = KMeans.fitModel(
           b0, "vec_id", "embedding", k, SimilarityQueries.IvfIters)
         val books = ProductQuantizer.trainBooks(b0, "vec_id", "embedding")
-        val schema = StructType(Seq(
-          StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType))))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(base + "/splits")
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            StreamingIvfPq.applyFrozenBatch(s, b, centFp, books, postingsDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        StreamFlow.drain(src) { (b, _) =>
+          StreamingIvfPq.applyFrozenBatch(s, b, centFp, books, postingsDir)
+        }
         SimilarityQueries.ivfPqSearchFromPostings(
           s, s.read.parquet(postingsDir), centFp, books, k)
       }
@@ -1535,20 +1269,11 @@ object StreamingQueries {
         val base = tmpDir("graft_sdec")
         val stateDir = base + "/state"
         StreamingDecontam.initState(s, stateDir)
-        StreamFlow.writeTimeSplits(train, "vec_id", 3, base + "/splits")
-        val schema = StructType(Seq(
-          StructField("vec_id", LongType),
-          StructField("embedding", ArrayType(FloatType))))
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(base + "/splits")
-          .writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            StreamingDecontam.applyBatch(s, b, eval,
-              SimilarityQueries.ContamTau, stateDir)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val src = StreamFlow.splitSource(train, "vec_id", 3, base + "/splits")
+        StreamFlow.drain(src) { (b, _) =>
+          StreamingDecontam.applyBatch(s, b, eval,
+            SimilarityQueries.ContamTau, stateDir)
+        }
         s.read.parquet(stateDir).orderBy("vec_id")
       }
     },

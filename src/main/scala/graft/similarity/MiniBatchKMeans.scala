@@ -3,7 +3,6 @@ package graft.similarity
 import graft.streaming.StreamFlow
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Streaming (mini-batch) k-means: embedding vectors arrive in
   * micro-batches; each point is assigned ONCE, at arrival, against the
@@ -36,19 +35,8 @@ object MiniBatchKMeans {
     val pts = KMeans.pointsFp(emb, idCol, vecCol)
     val splitDir = baseDir + "/splits"
     val stateDir = baseDir + "/state"
-    StreamFlow.writeTimeSplits(pts, "vec_id", nBatches, splitDir)
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("p", ArrayType(LongType))))
-    val q = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(splitDir)
-      .writeStream.outputMode("append")
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        applyBatch(s, b, id, k, stateDir)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val src = StreamFlow.splitSource(pts, "vec_id", nBatches, splitDir)
+    StreamFlow.drain(src) { (b, id) => applyBatch(s, b, id, k, stateDir) }
     s.read.parquet(stateDir)
       .select(col("cid"), col("dim"), col("n").as("n_points"),
         expr("s div n").as("centroid_fp"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
@@ -29,14 +29,45 @@ object StreamFlow {
     else reader.parquet(path)
   }
 
-  /** Materialise a bounded frame as `n` single-file parquet splits in
-    * ascending ranges of a (numeric) event-time column, so a file-stream
-    * drain with `maxFilesPerTrigger=1` processes them as `n` successive
-    * micro-batches — the harness that makes incremental state on bounded
-    * data honest (each batch sees only its slice of the timeline).
-    * Rows with a null `tsCol` have no place on the timeline and are
-    * dropped, as an event-time watermark would drop them anyway.
+  /** The key-range slicing rule of every streamed fold: `n` slices of
+    * width `step = (hi - lo) / n + 1` from the key's minimum `lo`, the
+    * last one open-ended. Slice `i` is a predicate on the key column;
+    * [[index]] renders the same rule as a column. The DuckDB oracles
+    * keep their own rendering of it, as the independent reference.
     */
+  final case class KeySlices(key: String, n: Int, lo: Long, step: Long) {
+
+    /** Rows of slice `i`; null keys belong to no slice. */
+    def slice(i: Int): Column =
+      col(key) >= lo + i * step &&
+        (if (i == n - 1) lit(true) else col(key) < lo + (i + 1) * step)
+
+    /** The slice index of each row, `(key - lo) div step` — in `0 until
+      * n` for every key of the frame the bounds came from.
+      */
+    def index: Column = expr(s"($key - $lo) div $step")
+  }
+
+  /** [[KeySlices]] of `df` over its (long) `key` column, or None when
+    * no row has a non-null key. Runs one aggregate job.
+    */
+  private def keySlices(df: DataFrame, key: String, n: Int)
+      : Option[KeySlices] = {
+    val b = df.agg(min(col(key)), max(col(key))).collect()(0)
+    if (b.isNullAt(0)) None
+    else {
+      val (lo, hi) = (b.getLong(0), b.getLong(1))
+      Some(KeySlices(key, n, lo, math.max(1L, (hi - lo) / n + 1)))
+    }
+  }
+
+  /** [[keySlices]] of a frame that must have a key to slice — the
+    * frozen-model bootstraps train on its slice 0.
+    */
+  def requireKeySlices(df: DataFrame, key: String, n: Int): KeySlices =
+    keySlices(df, key, n).getOrElse(throw new IllegalArgumentException(
+      s"cannot slice on $key: no row has a non-null $key"))
+
   /** Write `df` as ONE parquet file named `split-<idx>` under `dir`
     * (zero-padded names keep lexicographic = chronological order for the
     * file source's tie-break on equal modification times).
@@ -49,16 +80,20 @@ object StreamFlow {
     val part = fs.listStatus(tmp)
       .map(_.getPath).find(_.getName.startsWith("part-"))
       .getOrElse(throw new IllegalStateException(
-        s"writeTimeSplits: no part file under $tmp"))
-    fs.rename(part, new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(dir), f"split-$idx%03d.parquet"))
+        s"writeSplitFile: no part file under $tmp"))
+    val dst = new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(dir), f"split-$idx%03d.parquet")
+    if (!fs.rename(part, dst))
+      throw new java.io.IOException(
+        s"writeSplitFile: rename $part -> $dst failed")
     fs.delete(tmp, true)
   }
 
-  /** Append one more single-file split AFTER a [[writeTimeSplits]] call —
-    * the sentinel harness for bounded outer-join drains: a far-future
-    * batch advances the watermark past the real timeline, and the batch
-    * after it evicts (and thus emits) the expired outer-join state.
+  /** Append one more single-file split AFTER a [[splitSource]] call and
+    * before its drain starts — the sentinel harness for bounded
+    * outer-join drains: a far-future batch advances the watermark past
+    * the real timeline, and the batch after it evicts (and thus emits)
+    * the expired outer-join state.
     */
   def appendSplit(df: DataFrame, dir: String, idx: Int): Unit = {
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -66,29 +101,56 @@ object StreamFlow {
     writeSplitFile(df, fs, dir, idx)
   }
 
-  def writeTimeSplits(
-      df: DataFrame, tsCol: String, n: Int, dir: String): Unit = {
-    val spark = df.sparkSession
+  /** Materialise a bounded frame as `n` single-file parquet splits, one
+    * per [[KeySlices]] slice of its (long) `key` column, so a file-stream
+    * drain with `maxFilesPerTrigger=1` processes them as `n` successive
+    * micro-batches — the harness that makes incremental state on bounded
+    * data honest (each batch sees only its slice of the timeline).
+    * Rows with a null key have no place on the timeline and are
+    * dropped, as an event-time watermark would drop them anyway. An
+    * input without a non-null key lands as a single empty split, so the
+    * drain still runs one batch and initialises its state.
+    */
+  private def writeTimeSplits(
+      df: DataFrame, key: String, n: Int, dir: String): Unit = {
     val out = new org.apache.hadoop.fs.Path(dir)
-    val fs = out.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = out.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
     if (fs.exists(out)) fs.delete(out, true)
     fs.mkdirs(out)
-    val bounds = df.agg(min(col(tsCol)), max(col(tsCol))).collect()(0)
-    // empty input (or all-null event times): land a single empty split so
-    // the drain still runs one batch and initialises its state stores
-    if (bounds.isNullAt(0)) {
-      writeSplitFile(df.where(lit(false)), fs, dir, 0)
-      return
-    }
-    val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-    val step = math.max(1L, (hi - lo) / n + 1)
-    (0 until n).foreach { i =>
-      val slice = df.where(
-        col(tsCol) >= lo + i * step &&
-          (if (i == n - 1) lit(true) else col(tsCol) < lo + (i + 1) * step))
-      writeSplitFile(slice, fs, dir, i)
+    keySlices(df, key, n) match {
+      case None => writeSplitFile(df.where(lit(false)), fs, dir, 0)
+      case Some(ks) => (0 until n).foreach { i =>
+        writeSplitFile(df.where(ks.slice(i)), fs, dir, i)
+      }
     }
   }
+
+  /** The one way a bounded frame becomes micro-batches: write its
+    * key-range splits under `dir` ([[writeTimeSplits]]) and return the
+    * file-stream source over them, one split per trigger, with `df`'s
+    * schema. Nothing is read until a drain starts, so [[appendSplit]]
+    * may still add splits in between.
+    */
+  def splitSource(df: DataFrame, key: String, n: Int, dir: String)
+      : DataFrame = {
+    writeTimeSplits(df, key, n, dir)
+    df.sparkSession.readStream.schema(df.schema)
+      .option("maxFilesPerTrigger", "1").parquet(dir)
+  }
+
+  /** Run `fold` over every micro-batch of the bounded stream `source`
+    * to completion (Trigger.AvailableNow), with the batch id; over a
+    * [[splitSource]] the fold sees the splits in key order as batches
+    * 0, 1, …. Append mode hands it the rows as they arrive; `update`
+    * hands a streaming aggregate its changed rows.
+    */
+  def drain(source: DataFrame, outputMode: String = "append")(
+      fold: (DataFrame, Long) => Unit): Unit =
+    source.writeStream.outputMode(outputMode)
+      .foreachBatch(fold)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
 
   /** Watermarked tumbling-window aggregation: event-time correctness with
     * bounded state — at scale the watermark is what lets Spark evict
@@ -100,19 +162,12 @@ object StreamFlow {
       windowLength: String,
       watermarkDelay: String,
       groupCols: Seq[String],
-      aggs: Seq[org.apache.spark.sql.Column]): DataFrame =
+      aggs: Seq[Column]): DataFrame =
     events
       .withWatermark(tsCol, watermarkDelay)
       .groupBy(window(col(tsCol), windowLength) +: groupCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
 
-  /** Drain a bounded stream to completion into an in-memory table and
-    * return it: Trigger.AvailableNow processes everything currently in
-    * the source then stops — the streaming-backfill pattern. Complete
-    * output mode (the default) keeps windowed aggregations deterministic
-    * (every window emitted, none dropped by the watermark cutoff);
-    * stateful flatMapGroupsWithState pipelines use append.
-    */
   /** State store provider for every stateful drain: RocksDB. The
     * default HDFS-backed provider keeps each partition's entire state
     * map ON HEAP — at real streaming throughput (stream-stream join
@@ -137,6 +192,13 @@ object StreamFlow {
       "changelogCheckpointing.enabled", "true")
   }
 
+  /** Drain a bounded stream to completion into an in-memory table and
+    * return it: Trigger.AvailableNow processes everything currently in
+    * the source then stops — the streaming-backfill pattern. Complete
+    * output mode (the default) keeps windowed aggregations deterministic
+    * (every window emitted, none dropped by the watermark cutoff);
+    * stateful flatMapGroupsWithState pipelines use append.
+    */
   def runToMemory(
       agg: DataFrame, spark: SparkSession, name: String,
       outputMode: String = "complete",

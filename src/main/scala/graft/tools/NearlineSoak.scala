@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.streaming.StreamFlow
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -20,8 +21,8 @@ import org.apache.spark.sql.types._
   * every batch pays the exact full-state probe).
   *
   * Batches replay through the same applyBatch entry points the
-  * streaming queries use, sliced by the same id-range rule as
-  * `StreamFlow.writeTimeSplits`, but invoked directly so the
+  * streaming queries use, sliced by the same id-range rule
+  * (`StreamFlow.KeySlices`), but invoked directly so the
   * measurement isolates fold cost from structured-streaming harness
   * overhead.
   *
@@ -58,14 +59,8 @@ object NearlineSoak {
       .select(col("doc_id"), col("text"))
 
     def slices(df: DataFrame, idCol: String): Seq[DataFrame] = {
-      val b = df.agg(min(col(idCol)), max(col(idCol))).collect()(0)
-      val (lo, hi) = (b.getLong(0), b.getLong(1))
-      val step = math.max(1L, (hi - lo) / nBatches + 1)
-      (0 until nBatches).map { i =>
-        df.where(col(idCol) >= lo + i * step &&
-          (if (i == nBatches - 1) lit(true)
-           else col(idCol) < lo + (i + 1) * step))
-      }
+      val ks = StreamFlow.requireKeySlices(df, idCol, nBatches)
+      (0 until nBatches).map(i => df.where(ks.slice(i)))
     }
 
     def soak(name: String, batches: Seq[DataFrame],

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.similarity.{AnnRecall, KMeans, ProductQuantizer, VectorFunctions}
+import graft.streaming.StreamFlow
 import graft.util.Fmt
 
 /** Scale-recall measurement main — the three shipped compression axes
@@ -196,13 +197,10 @@ object RecallScale {
     // candidate-set recall at the bootstrap-derived nprobe) and the
     // streamed IVF×PQ index (q_stream_ann_ivf_pq: bootstrap-trained
     // codebooks + frozen coarse probes + fixed-factor exact rerank).
-    // Bootstrap = batch 0 of the writeTimeSplits id-range slicing rule,
-    // exactly as the shipped queries derive it.
-    val bRow = embDd.agg(min(col("vec_id")), max(col("vec_id")))
-      .collect()(0)
-    val stepF = math.max(1L, (bRow.getLong(1) - bRow.getLong(0)) / 3 + 1)
-    val b0 = embDd.where(col("vec_id") < bRow.getLong(0) + stepF)
-      .localCheckpoint()
+    // Bootstrap = slice 0 of the streams' key-range slicing
+    // (StreamFlow.KeySlices), exactly as the shipped queries derive it.
+    val slicesF = StreamFlow.requireKeySlices(embDd, "vec_id", 3)
+    val b0 = embDd.where(slicesF.slice(0)).localCheckpoint()
     val kF = graft.queries.SimilarityQueries.ivfK(b0.count())
     val npF = graft.queries.SimilarityQueries.ivfNProbe(kF)
     val (centF, _) = KMeans.fitModel(b0, "vec_id", "embedding", kF,
@@ -304,14 +302,13 @@ object RecallScale {
     val (npSplitR, ivfSplitRDd, scannedSplitR) =
       budgetNprobe(centSplitR, asgSplitR, 0.3)
     // (b) requantize on the recent third (id-range recency, the
-    // writeTimeSplits arrival order) — the cautionary arm: old queries
+    // stream's arrival order) — the cautionary arm: old queries
     // sit outside a newest-window training slice
     val rqDir = maintBase + "/postings_rq"
     frozenPostings.write.mode("overwrite").parquet(rqDir)
-    val recentCut = bRow.getLong(0) + 2 * stepF
     val centRq = StreamingIvf.requantize(s, rqDir, kT,
       graft.queries.SimilarityQueries.IvfIters,
-      trainPred = col("vec_id") >= recentCut)
+      trainPred = slicesF.slice(2))
     val asgRq = s.read.parquet(rqDir)
       .select(col("vec_id"), col("label").cast("long").as("cid"))
     val (ivfRqDd, scannedRq) = candScore(centRq, asgRq, npT)
