@@ -41,7 +41,7 @@ object Nearline {
       .withColumn("phase", lit("seed"))
       .write.mode("overwrite").parquet(pairsDir)
     val src = StreamFlow.splitSource(
-      hashed.where(!seedPred), "doc", nBatches, splitDir)
+      hashed.where(!seedPred), "doc", nBatches, splitDir).stream
     StreamFlow.drain(src) { (b, _) =>
       applyBatch(s, b, indexDir, pairsDir, maxHamming)
     }

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -79,167 +78,83 @@ case class CosineSimilarity(left: Expression, right: Expression)
 /** Registration plumbing for the engine's native functions. */
 object GraftFunctions {
 
-  private val cosineSimDescriptor: (FunctionIdentifier,
+  private def native(name: String, cls: Class[_], arity: Int)(
+      build: Seq[Expression] => Expression): (FunctionIdentifier,
       ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("cosine_sim"),
-    new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
+    FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
     (children: Seq[Expression]) => {
-      require(children.size == 2, "cosine_sim expects exactly 2 arguments")
-      CosineSimilarity(children.head, children(1))
+      require(children.size == arity, s"$name expects exactly $arity " +
+        (if (arity == 1) "argument" else "arguments"))
+      build(children)
     })
 
-  private val repetitionStatsDescriptor: (FunctionIdentifier,
-      ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("repetition_stats"),
-    new ExpressionInfo(classOf[RepetitionStats].getName, "repetition_stats"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1,
-        "repetition_stats expects exactly 1 argument")
-      RepetitionStats(children.head)
-    })
-
-  private val minHashBandKeysDescriptor: (FunctionIdentifier,
-      ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("minhash_band_keys"),
-    new ExpressionInfo(classOf[MinHashBandKeys].getName,
-      "minhash_band_keys"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1,
-        "minhash_band_keys expects exactly 1 argument")
-      MinHashBandKeys(children.head)
-    })
-
-  private val onePermBandKeysDescriptor: (FunctionIdentifier,
-      ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("oneperm_band_keys"),
-    new ExpressionInfo(classOf[OnePermBandKeys].getName,
-      "oneperm_band_keys"),
-    (children: Seq[Expression]) => {
-      require(children.size == 1,
-        "oneperm_band_keys expects exactly 1 argument")
-      OnePermBandKeys(children.head)
-    })
-
-  private val shinglesDescriptor: (FunctionIdentifier,
-      ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("shingles_k"),
-    new ExpressionInfo(classOf[Shingles].getName, "shingles_k"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "shingles_k expects exactly 2 arguments")
-      Shingles(children.head, children(1))
-    })
-
-  private val charNgramsDescriptor: (FunctionIdentifier,
-      ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("char_ngrams"),
-    new ExpressionInfo(classOf[CharNgrams].getName, "char_ngrams"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "char_ngrams expects exactly 2 arguments")
-      CharNgrams(children.head, children(1))
-    })
-
-  private val wordNgramsDescriptor: (FunctionIdentifier,
-      ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("word_ngrams"),
-    new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),
-    (children: Seq[Expression]) => {
-      require(children.size == 2, "word_ngrams expects exactly 2 arguments")
-      WordNgrams(children.head, children(1))
-    })
+  /** Every native function: name, expression class, arity, builder. */
+  private[functions] val natives = Seq(
+    native("shingles_k", classOf[Shingles], 2)(c => Shingles(c(0), c(1))),
+    native("cosine_sim", classOf[CosineSimilarity], 2)(
+      c => CosineSimilarity(c(0), c(1))),
+    native("repetition_stats", classOf[RepetitionStats], 1)(
+      c => RepetitionStats(c(0))),
+    native("minhash_band_keys", classOf[MinHashBandKeys], 1)(
+      c => MinHashBandKeys(c(0))),
+    native("oneperm_band_keys", classOf[OnePermBandKeys], 1)(
+      c => OnePermBandKeys(c(0))),
+    native("char_ngrams", classOf[CharNgrams], 2)(
+      c => CharNgrams(c(0), c(1))),
+    native("word_ngrams", classOf[WordNgrams], 2)(
+      c => WordNgrams(c(0), c(1))),
+    native("det_ln", classOf[DetLn], 1)(c => DetLn(c(0))))
 
   /** Register on an existing session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      shinglesDescriptor._1, shinglesDescriptor._2, shinglesDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      cosineSimDescriptor._1, cosineSimDescriptor._2, cosineSimDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      repetitionStatsDescriptor._1, repetitionStatsDescriptor._2,
-      repetitionStatsDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      minHashBandKeysDescriptor._1, minHashBandKeysDescriptor._2,
-      minHashBandKeysDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      onePermBandKeysDescriptor._1, onePermBandKeysDescriptor._2,
-      onePermBandKeysDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      charNgramsDescriptor._1, charNgramsDescriptor._2,
-      charNgramsDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      wordNgramsDescriptor._1, wordNgramsDescriptor._2,
-      wordNgramsDescriptor._3)
+  def register(spark: SparkSession): Unit = natives.foreach {
+    case (id, info, build) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, build)
+  }
+
+  /** `name(args…)` after registering the natives on `spark`. */
+  private def call(spark: SparkSession, name: String, args: Column*)
+      : Column = {
+    register(spark)
+    org.apache.spark.sql.functions.call_udf(name, args: _*)
   }
 
   /** Column-level accessor for [[WordNgrams]]. */
-  def wordNgrams(spark: SparkSession, text: Column, n: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_udf("word_ngrams", text,
-      org.apache.spark.sql.functions.lit(n))
-  }
+  def wordNgrams(spark: SparkSession, text: Column, n: Int): Column =
+    call(spark, "word_ngrams", text, org.apache.spark.sql.functions.lit(n))
 
   /** Column-level accessor for [[CharNgrams]]. */
-  def charNgrams(spark: SparkSession, text: Column, n: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_udf("char_ngrams", text,
-      org.apache.spark.sql.functions.lit(n))
-  }
+  def charNgrams(spark: SparkSession, text: Column, n: Int): Column =
+    call(spark, "char_ngrams", text, org.apache.spark.sql.functions.lit(n))
 
   /** Column-level accessor (registers on the session first). */
-  def cosineSim(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_udf("cosine_sim", a, b)
-  }
+  def cosineSim(spark: SparkSession, a: Column, b: Column): Column =
+    call(spark, "cosine_sim", a, b)
 
   /** Column-level accessor for [[RepetitionStats]]. */
-  def repetitionStats(spark: SparkSession, toks: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_udf("repetition_stats", toks)
-  }
+  def repetitionStats(spark: SparkSession, toks: Column): Column =
+    call(spark, "repetition_stats", toks)
 
   /** Column-level accessor for [[OnePermBandKeys]]. */
-  def onePermBandKeys(spark: SparkSession, shingles: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_udf("oneperm_band_keys", shingles)
-  }
+  def onePermBandKeys(spark: SparkSession, shingles: Column): Column =
+    call(spark, "oneperm_band_keys", shingles)
 
   /** Column-level accessor for [[MinHashBandKeys]]. */
-  def minHashBandKeys(spark: SparkSession, shingles: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_udf("minhash_band_keys", shingles)
-  }
+  def minHashBandKeys(spark: SparkSession, shingles: Column): Column =
+    call(spark, "minhash_band_keys", shingles)
 
   /** Column-level accessor for [[Shingles]]. */
-  def shinglesK(spark: SparkSession, text: Column, k: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_udf("shingles_k", text,
-      org.apache.spark.sql.functions.lit(k))
-  }
+  def shinglesK(spark: SparkSession, text: Column, k: Int): Column =
+    call(spark, "shingles_k", text, org.apache.spark.sql.functions.lit(k))
+
+  /** Column-level accessor for [[DetLn]]. */
+  def detLn(spark: SparkSession, m: Column): Column =
+    call(spark, "det_ln", m)
 }
 
-/** `spark.sql.extensions`-style injection
+/** `spark.sql.extensions`-style injection of every native function
   * (`.config("spark.sql.extensions", "graft.functions.GraftSparkExtensions")`).
   */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
-  def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (FunctionIdentifier("cosine_sim"),
-        new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-        (children: Seq[Expression]) => CosineSimilarity(
-          children.head, children(1))))
-    ext.injectFunction(
-      (FunctionIdentifier("repetition_stats"),
-        new ExpressionInfo(classOf[RepetitionStats].getName,
-          "repetition_stats"),
-        (children: Seq[Expression]) => RepetitionStats(children.head)))
-    ext.injectFunction(
-      (FunctionIdentifier("minhash_band_keys"),
-        new ExpressionInfo(classOf[MinHashBandKeys].getName,
-          "minhash_band_keys"),
-        (children: Seq[Expression]) => MinHashBandKeys(children.head)))
-    ext.injectFunction(
-      (FunctionIdentifier("shingles_k"),
-        new ExpressionInfo(classOf[Shingles].getName, "shingles_k"),
-        (children: Seq[Expression]) => Shingles(
-          children.head, children(1))))
-  }
+  def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.natives.foreach(ext.injectFunction)
 }

@@ -1,7 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.types._
 
 /** Cross-engine-DETERMINISTIC natural log of positive integer-valued
   * columns.
@@ -11,13 +14,20 @@ import org.apache.spark.sql.functions._
   * `floor(x * 2^20)` snap can amplify that ulp into a flipped integer
   * (the latent cross-engine flake flagged on the BM25 scorer). This
   * helper removes libm from BOTH plans: range-reduce `m = 2^k * r`
-  * with an explicit power-of-two CASE ladder (exact double literals),
-  * then `ln(r)` for `r in [1,2)` via the odd artanh series on
+  * with an exact integer `k = floor(log2 m)` and an exact power-of-two
+  * double, then `ln(r)` for `r in [1,2)` via the odd artanh series on
   * `t = (r-1)/(r+1) in [0, 1/3]` — Horner to `t^15`, absolute error
   * under 1e-9. Every operation involved is a correctly-rounded
   * IEEE-754 `+ - * /` or a decimal-literal parse, both of which every
-  * engine rounds identically, so the Column rendering and the SQL
-  * rendering below produce bit-identical doubles by construction.
+  * engine rounds identically, so the two renderings below produce
+  * bit-identical doubles by construction:
+  *  - [[DetLnKernel]], the one JVM implementation, behind the native
+  *    Catalyst expression [[DetLn]] (`det_ln`, one static call per
+  *    row) and the driver-side [[lnIntRef]];
+  *  - the DuckDB SQL rendering ([[lnCtes]], [[lnRatioCtes]]), the
+  *    independent reference the oracles replay.
+  * There is no Column-expression rendering: a Column tree of this
+  * arithmetic is ~450 nodes that Catalyst inlines at every reference.
   * The approximation — not libm ln — IS the engine's log definition
   * for ranking scores; it is strictly increasing in `m`, so orderings
   * keep BM25/TF-IDF qualitative behaviour.
@@ -38,45 +48,23 @@ object DetLog {
     * shortest-round-trip `toString`, which parses back to the same
     * double in any correctly-rounded reader.
     */
-  private val C3 = 1.0 / 3.0
-  private val C5 = 1.0 / 5.0
-  private val C7 = 1.0 / 7.0
-  private val C9 = 1.0 / 9.0
-  private val C11 = 1.0 / 11.0
-  private val C13 = 1.0 / 13.0
-  private val C15 = 1.0 / 15.0
+  private[functions] val C3 = 1.0 / 3.0
+  private[functions] val C5 = 1.0 / 5.0
+  private[functions] val C7 = 1.0 / 7.0
+  private[functions] val C9 = 1.0 / 9.0
+  private[functions] val C11 = 1.0 / 11.0
+  private[functions] val C13 = 1.0 / 13.0
+  private[functions] val C15 = 1.0 / 15.0
 
   /** Ladder exponents, high to low; covers every positive Long. */
   private val Ks: Seq[Int] = 62 to 1 by -1
 
-  // ---- Column rendering -------------------------------------------------
+  // ---- Catalyst rendering: the native det_ln expression ------------------
 
-  /** floor(log2(m)) of a positive integer column — EXACT integer route:
-    * the bit length of m minus one (`bin` renders without leading
-    * zeros). No floating log anywhere near the branch, and identical to
-    * the SQL rendering's explicit CASE ladder because both compute the
-    * same integer exactly. (A Column-side CASE ladder was measured ~2×
-    * slower on vocabulary-sized frames: Catalyst inlines the 62-branch
-    * tree into every reference.)
+  /** Deterministic ln of a positive integer-valued (integral) column:
+    * `det_ln`, registered on the active session first.
     */
-  private def kBits(m: Column): Column =
-    (length(bin(m)) - 1).cast("int")
-
-  /** 2^floor(log2(m)) as an exact double: integer shift, exact cast. */
-  private def p2Bits(m: Column): Column =
-    call_function("shiftleft", lit(1L), kBits(m)).cast("double")
-
-  private def horner(t2: Column): Column =
-    lit(1.0) + t2 * (lit(C3) + t2 * (lit(C5) + t2 * (lit(C7) +
-      t2 * (lit(C9) + t2 * (lit(C11) + t2 * (lit(C13) + t2 * lit(C15)))))))
-
-  /** Deterministic ln of a positive integer-valued (long) column. */
-  def lnInt(m: Column): Column = {
-    val r = m.cast("double") / p2Bits(m)
-    val t = (r - lit(1.0)) / (r + lit(1.0))
-    val t2 = t * t
-    kBits(m).cast("double") * lit(Ln2) + lit(2.0) * (t * horner(t2))
-  }
+  def lnInt(m: Column): Column = GraftFunctions.detLn(SparkSession.active, m)
 
   /** Deterministic ln(a/b) for positive integer-valued columns. */
   def lnRatio(a: Column, b: Column): Column = lnInt(a) - lnInt(b)
@@ -118,7 +106,7 @@ object DetLog {
     * `srcFrom` (a FROM fragment), carrying `carry` columns through.
     * The final CTE is named `prefix`. Staged so the big ladders and
     * the t/t2 subtrees are evaluated once per row, mirroring the
-    * Column DAG exactly.
+    * kernel's arithmetic exactly.
     */
   def lnRatioCtes(prefix: String, srcFrom: String, aExpr: String,
       bExpr: String, outCol: String, carry: Seq[String]): String = {
@@ -160,21 +148,60 @@ object DetLog {
        |  FROM ${prefix}_t2)""".stripMargin
   }
 
-  // ---- Plain-Scala reference (same DAG; for specs and driver use) -------
+  // ---- Plain-Scala reference (driver use and specs) ---------------------
 
   def lnIntRef(m: Long): Double = {
     require(m >= 1, s"lnIntRef needs a positive integer, got $m")
-    var k = 0
-    var j = 62
-    while (j >= 1 && k == 0) { if (m >= (1L << j)) k = j; j -= 1 }
-    val p2 = if (k == 0) 1.0 else (1L << k).toDouble
-    val r = m.toDouble / p2
+    DetLnKernel.lnInt(m)
+  }
+
+  def lnRatioRef(a: Long, b: Long): Double = lnIntRef(a) - lnIntRef(b)
+}
+
+/** The JVM arithmetic of [[DetLog]], shared by [[DetLn]]'s interpreted
+  * and generated paths and by [[DetLog.lnIntRef]]. Defined for every
+  * long: `k` is the bit length of `m` minus one (0 for `m = 0`, 63 for
+  * a negative `m`), `r = m / 2^k`, then the artanh series.
+  */
+object DetLnKernel {
+  import DetLog.{C3, C5, C7, C9, C11, C13, C15, Ln2}
+
+  def lnInt(m: Long): Double = {
+    val k = if (m == 0L) 0 else 63 - java.lang.Long.numberOfLeadingZeros(m)
+    val r = m.toDouble / (1L << k).toDouble
     val t = (r - 1.0) / (r + 1.0)
     val t2 = t * t
     val h = 1.0 + t2 * (C3 + t2 * (C5 + t2 * (C7 + t2 * (C9 +
       t2 * (C11 + t2 * (C13 + t2 * C15))))))
     k.toDouble * Ln2 + 2.0 * (t * h)
   }
+}
 
-  def lnRatioRef(a: Long, b: Long): Double = lnIntRef(a) - lnIntRef(b)
+/** Native Catalyst expression `det_ln(m)` → double: [[DetLnKernel]] on
+  * an integral input (`byte`/`short`/`int` sign-extend to `long`; any
+  * other type is rejected, never rounded). Codegen is one static call,
+  * so a log is one plan node instead of an inlined arithmetic tree.
+  */
+case class DetLn(child: Expression) extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ByteType | ShortType | IntegerType | LongType =>
+      TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects an integral input, got ${other.simpleString}")
+  }
+
+  override def dataType: DataType = DoubleType
+
+  override def prettyName: String = "det_ln"
+
+  override def nullSafeEval(m: Any): Any =
+    DetLnKernel.lnInt(m.asInstanceOf[Number].longValue)
+
+  override protected def doGenCode(
+      ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, m => s"graft.functions.DetLnKernel.lnInt((long) $m)")
+
+  override protected def withNewChildInternal(newChild: Expression): DetLn =
+    copy(child = newChild)
 }

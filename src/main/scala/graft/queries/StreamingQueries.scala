@@ -41,7 +41,7 @@ object StreamingQueries {
     val gapUs = gapMinutes * 60L * 1000 * 1000
     val gapMs = gapMinutes * 60L * 1000
     val events = StreamFlow.splitSource(
-        batch.select("user_id", "ts_us"), "ts_us", nSplits, splitDir)
+        batch.select("user_id", "ts_us"), "ts_us", nSplits, splitDir).stream
       .withColumn("ts", timestamp_micros(col("ts_us")))
       .withWatermark("ts", "10 minutes")
       .as[(Long, Long, java.sql.Timestamp)]
@@ -115,9 +115,9 @@ object StreamingQueries {
       .select(col("user_id"), col("event_id"), col("event_type"),
         eventsTsUs(s, dir).as("ts_us"))
     val splitDir = tmpDir("graft_sjo_split") + "/splits"
-    val ev = StreamFlow.splitSource(batch, "ts_us", 3, splitDir)
-      .withColumn("tsm", timestamp_micros(col("ts_us")))
-    val hiUs = batch.agg(max(col("ts_us"))).collect()(0).getLong(0)
+    val split = StreamFlow.splitSource(batch, "ts_us", 3, splitDir)
+    val ev = split.stream.withColumn("tsm", timestamp_micros(col("ts_us")))
+    val hiUs = split.requireSlices.hi
     val dayUs = 86400L * 1000000L
     import s.implicits._
     def sentinel(tsUs: Long) = Seq(
@@ -379,7 +379,7 @@ object StreamingQueries {
         val base = tmpDir("graft_upsert")
         val splitDir = base + "/splits"
         val target = base + "/bse_event_totals"
-        val agg = StreamFlow.splitSource(batch, "ts_us", 3, splitDir)
+        val agg = StreamFlow.splitSource(batch, "ts_us", 3, splitDir).stream
           .groupBy("event_type")
           .agg(count(lit(1)).as("n_events"),
             sum(col("value").cast("decimal(28,2)")).as("__tv"))
@@ -426,6 +426,7 @@ object StreamingQueries {
         def load(df: DataFrame, splitDir: String, applyOps: Boolean)
             : Unit = {
           val src = StreamFlow.splitSource(df, "n_nationkey", 3, splitDir)
+            .stream
           StreamFlow.drain(src) { (b, _) =>
             val fs = new org.apache.hadoop.fs.Path(target)
               .getFileSystem(s.sessionState.newHadoopConf())
@@ -559,7 +560,7 @@ object StreamingQueries {
         val src = StreamFlow.splitSource(
           snaps.map { case (i, df) => df.withColumn("snap_seq", lit(i)) }
             .reduce(_ unionByName _),
-          "snap_seq", 3, s"${c.warehousePath}/snap_splits")
+          "snap_seq", 3, s"${c.warehousePath}/snap_splits").stream
         val lodPath = c.tablePath(Layer.LOD, spec.name)
         StreamFlow.drain(src) { (b, _) =>
           // one split file per trigger = one snapshot per batch; the
@@ -620,6 +621,7 @@ object StreamingQueries {
         val base = tmpDir("graft_shll")
         val regsDir = base + "/registers"
         val src = StreamFlow.splitSource(ev, "event_id", 4, base + "/splits")
+          .stream
         StreamFlow.drain(src) { (b, _) =>
           val regs = HllSketch.registers(s, b, "event_id")
           val fs = new org.apache.hadoop.fs.Path(regsDir)
@@ -656,6 +658,7 @@ object StreamingQueries {
         val base = tmpDir("graft_snb")
         val stateDir = base + "/state"
         val src = StreamFlow.splitSource(train, "doc_id", 3, base + "/splits")
+          .stream
         StreamFlow.drain(src) { (b, id) =>
           graft.text.NaiveBayes.applyBatch(s, b, "doc_id", "text",
             col("lang") === "en", id, stateDir)
@@ -675,6 +678,7 @@ object StreamingQueries {
         val base = tmpDir("graft_scms")
         val stateDir = base + "/state"
         val src = StreamFlow.splitSource(docs, "doc_id", 3, base + "/splits")
+          .stream
         StreamFlow.drain(src) { (b, id) =>
           CountMinSketch.applyBatch(s,
             b.select(
@@ -716,6 +720,7 @@ object StreamingQueries {
         val base = tmpDir("graft_sndiv")
         val stateDir = base + "/gram_state"
         val src = StreamFlow.splitSource(docs, "doc_id", 3, base + "/splits")
+          .stream
         StreamFlow.drain(src) { (b, id) =>
           NgramDiversity.applyBatch(s, b, id, stateDir)
         }
@@ -736,6 +741,7 @@ object StreamingQueries {
         val base = tmpDir("graft_sdex")
         val stateDir = base + "/fp_state"
         val src = StreamFlow.splitSource(docs, "doc_id", 3, base + "/splits")
+          .stream
         StreamFlow.drain(src) { (b, id) =>
           graft.dedup.Nearline.applyExactBatch(
             s, b, "text", "doc_id", id, stateDir)
@@ -764,6 +770,7 @@ object StreamingQueries {
         val marksDir = base + "/line_marks"
         LineDedup.initLineState(s, indexDir, marksDir)
         val src = StreamFlow.splitSource(lines, "lid", 3, base + "/splits")
+          .stream
         StreamFlow.drain(src) { (b, _) =>
           LineDedup.applyLineBatch(s, b.drop("lid"), indexDir, marksDir)
         }
@@ -782,6 +789,7 @@ object StreamingQueries {
         val dupDir = base + "/dup_occ"
         SpanDedup.initState(s, indexDir, dupDir)
         val src = StreamFlow.splitSource(docs, "doc_id", 3, base + "/splits")
+          .stream
         StreamFlow.drain(src) { (b, _) =>
           SpanDedup.applyBatch(s, b, "text", "doc_id", indexDir, dupDir)
         }
@@ -803,6 +811,7 @@ object StreamingQueries {
         val base = tmpDir("graft_sdsir")
         val stateDir = base + "/state"
         val src = StreamFlow.splitSource(docs, "doc_id", 3, base + "/splits")
+          .stream
         StreamFlow.drain(src) { (b, id) =>
           Dsir.applyBatch(s, b, "doc_id", "text",
             col("lang") === "en", id, stateDir)
@@ -834,6 +843,7 @@ object StreamingQueries {
         val base = tmpDir("graft_sbud")
         val stateDir = base + "/state"
         val src = StreamFlow.splitSource(docs, "doc_id", 3, base + "/splits")
+          .stream
         StreamFlow.drain(src) { (b, id) =>
           BudgetSelect.applyBatch(s, scored(b), "quality_score",
             "n_tokens", id, stateDir)
@@ -862,6 +872,7 @@ object StreamingQueries {
         val base = tmpDir("graft_slm")
         val stateDir = base + "/state"
         val src = StreamFlow.splitSource(train, "doc_id", 3, base + "/splits")
+          .stream
         StreamFlow.drain(src) { (b, id) =>
           graft.text.BigramLm.applyBatch(s, b, "doc_id", "text", id,
             stateDir)
@@ -891,6 +902,7 @@ object StreamingQueries {
           (base + "/band_index", base + "/shingle_store", base + "/pairs")
         Nearline.initMinHashState(s, indexDir, storeDir, pairsDir)
         val src = StreamFlow.splitSource(shingled, "doc", 3, base + "/splits")
+          .stream
         StreamFlow.drain(src) { (b, _) =>
           Nearline.applyMinHashBatch(s, b,
             threshold = DedupQueries.JaccardThreshold,
@@ -930,6 +942,7 @@ object StreamingQueries {
         IncrementalCC.initState(s, indexDir, pairsDir, labelsDir,
           remapDir)
         val src = StreamFlow.splitSource(shingled, "doc", 3, base + "/splits")
+          .stream
         StreamFlow.drain(src) { (b, _) =>
           IncrementalCC.applyBatch(s, b,
             DedupQueries.JaccardThreshold,
@@ -958,6 +971,7 @@ object StreamingQueries {
         val postingsDir = base + "/postings"
         StreamingIvf.initState(s, postingsDir)
         val src = StreamFlow.splitSource(emb, "vec_id", 3, base + "/splits")
+          .stream
         StreamFlow.drain(src) { (b, id) =>
           StreamingIvf.applyBatch(s, b, id, sumsDir, postingsDir)
         }
@@ -993,6 +1007,7 @@ object StreamingQueries {
         val stateDir = base + "/mv_state"
         Crossmodal.initState(s, stateDir)
         val src = StreamFlow.splitSource(docs, "doc_id", 3, base + "/splits")
+          .stream
         StreamFlow.drain(src) { (b, _) =>
           val wav = udf((id: Long) => MediaCodecs.Synthetic.wavFor(id))
           val packed = b.select(col("doc_id"), struct(
@@ -1047,6 +1062,7 @@ object StreamingQueries {
         val (dlDir, tfDir) = (base + "/dl", base + "/tf")
         Bm25.initState(s, "doc_id", dlDir, tfDir)
         val src = StreamFlow.splitSource(docs, "doc_id", 3, base + "/splits")
+          .stream
         StreamFlow.drain(src) { (b, _) =>
           Bm25.applyBatch(s, b, "doc_id", "text",
             TextQueries.Bm25Terms, dlDir, tfDir)
@@ -1067,10 +1083,10 @@ object StreamingQueries {
           .select(col("vec_id"), col("embedding"))
         val base = tmpDir("graft_sqdrift")
         val stateDir = base + "/drift_state"
-        val src = StreamFlow.splitSource(emb, "vec_id", 3, base + "/splits")
+        val split = StreamFlow.splitSource(emb, "vec_id", 3, base + "/splits")
+        val src = split.stream
         // frozen quantizer from batch 0: slice 0 of the splits' key ranges
-        val b0 = emb.where(
-          StreamFlow.requireKeySlices(emb, "vec_id", 3).slice(0))
+        val b0 = emb.where(split.requireSlices.slice(0))
         val k = SimilarityQueries.ivfK(b0.count())
         val (centFp, _) = KMeans.fitModel(
           b0, "vec_id", "embedding", k, SimilarityQueries.IvfIters)
@@ -1089,10 +1105,10 @@ object StreamingQueries {
         val base = tmpDir("graft_sivft")
         val postingsDir = base + "/postings"
         StreamingIvf.initState(s, postingsDir)
-        val src = StreamFlow.splitSource(emb, "vec_id", 3, base + "/splits")
+        val split = StreamFlow.splitSource(emb, "vec_id", 3, base + "/splits")
+        val src = split.stream
         // frozen quantizer from batch 0: slice 0 of the splits' key ranges
-        val b0 = emb.where(
-          StreamFlow.requireKeySlices(emb, "vec_id", 3).slice(0))
+        val b0 = emb.where(split.requireSlices.slice(0))
         val k = SimilarityQueries.ivfK(b0.count())
         val (centFp, _) = KMeans.fitModel(
           b0, "vec_id", "embedding", k, SimilarityQueries.IvfIters)
@@ -1126,9 +1142,9 @@ object StreamingQueries {
         val postingsDir = base + "/postings"
         val driftDir = base + "/drift"
         StreamingIvf.initState(s, postingsDir)
-        val src = StreamFlow.splitSource(emb, "vec_id", 3, base + "/splits")
-        val b0 = emb.where(
-          StreamFlow.requireKeySlices(emb, "vec_id", 3).slice(0))
+        val split = StreamFlow.splitSource(emb, "vec_id", 3, base + "/splits")
+        val src = split.stream
+        val b0 = emb.where(split.requireSlices.slice(0))
         val kBoot = SimilarityQueries.ivfK(b0.count())
         val (centBoot, _) = KMeans.fitModel(
           b0, "vec_id", "embedding", kBoot, SimilarityQueries.IvfIters)
@@ -1168,9 +1184,9 @@ object StreamingQueries {
         val postingsDir = base + "/postings"
         val driftDir = base + "/drift"
         StreamingIvf.initState(s, postingsDir)
-        val src = StreamFlow.splitSource(emb, "vec_id", 3, base + "/splits")
-        val b0 = emb.where(
-          StreamFlow.requireKeySlices(emb, "vec_id", 3).slice(0))
+        val split = StreamFlow.splitSource(emb, "vec_id", 3, base + "/splits")
+        val src = split.stream
+        val b0 = emb.where(split.requireSlices.slice(0))
         val kBoot = SimilarityQueries.ivfK(b0.count())
         val (centBoot, _) = KMeans.fitModel(
           b0, "vec_id", "embedding", kBoot, SimilarityQueries.IvfIters)
@@ -1204,10 +1220,10 @@ object StreamingQueries {
         val base = tmpDir("graft_spq")
         val postingsDir = base + "/postings"
         StreamingPq.initState(s, postingsDir)
-        val src = StreamFlow.splitSource(emb, "vec_id", 3, base + "/splits")
+        val split = StreamFlow.splitSource(emb, "vec_id", 3, base + "/splits")
+        val src = split.stream
         // frozen books from batch 0: slice 0 of the splits' key ranges
-        val b0 = emb.where(
-          StreamFlow.requireKeySlices(emb, "vec_id", 3).slice(0))
+        val b0 = emb.where(split.requireSlices.slice(0))
         val books = ProductQuantizer.trainBooks(b0, "vec_id", "embedding")
         StreamFlow.drain(src) { (b, _) =>
           StreamingPq.applyFrozenBatch(s, b, books, postingsDir)
@@ -1235,10 +1251,10 @@ object StreamingQueries {
         val base = tmpDir("graft_sivfpq")
         val postingsDir = base + "/postings"
         StreamingIvfPq.initState(s, postingsDir)
-        val src = StreamFlow.splitSource(emb, "vec_id", 3, base + "/splits")
+        val split = StreamFlow.splitSource(emb, "vec_id", 3, base + "/splits")
+        val src = split.stream
         // frozen models from batch 0: slice 0 of the splits' key ranges
-        val b0 = emb.where(
-          StreamFlow.requireKeySlices(emb, "vec_id", 3).slice(0))
+        val b0 = emb.where(split.requireSlices.slice(0))
         val k = SimilarityQueries.ivfK(b0.count())
         val (centFp, _) = KMeans.fitModel(
           b0, "vec_id", "embedding", k, SimilarityQueries.IvfIters)
@@ -1270,6 +1286,7 @@ object StreamingQueries {
         val stateDir = base + "/state"
         StreamingDecontam.initState(s, stateDir)
         val src = StreamFlow.splitSource(train, "vec_id", 3, base + "/splits")
+          .stream
         StreamFlow.drain(src) { (b, _) =>
           StreamingDecontam.applyBatch(s, b, eval,
             SimilarityQueries.ContamTau, stateDir)

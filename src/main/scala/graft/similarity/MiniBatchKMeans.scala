@@ -35,7 +35,7 @@ object MiniBatchKMeans {
     val pts = KMeans.pointsFp(emb, idCol, vecCol)
     val splitDir = baseDir + "/splits"
     val stateDir = baseDir + "/state"
-    val src = StreamFlow.splitSource(pts, "vec_id", nBatches, splitDir)
+    val src = StreamFlow.splitSource(pts, "vec_id", nBatches, splitDir).stream
     StreamFlow.drain(src) { (b, id) => applyBatch(s, b, id, k, stateDir) }
     s.read.parquet(stateDir)
       .select(col("cid"), col("dim"), col("n").as("n_points"),

@@ -35,7 +35,9 @@ object StreamFlow {
     * [[index]] renders the same rule as a column. The DuckDB oracles
     * keep their own rendering of it, as the independent reference.
     */
-  final case class KeySlices(key: String, n: Int, lo: Long, step: Long) {
+  final case class KeySlices(key: String, n: Int, lo: Long, hi: Long) {
+
+    val step: Long = math.max(1L, (hi - lo) / n + 1)
 
     /** Rows of slice `i`; null keys belong to no slice. */
     def slice(i: Int): Column =
@@ -55,18 +57,27 @@ object StreamFlow {
       : Option[KeySlices] = {
     val b = df.agg(min(col(key)), max(col(key))).collect()(0)
     if (b.isNullAt(0)) None
-    else {
-      val (lo, hi) = (b.getLong(0), b.getLong(1))
-      Some(KeySlices(key, n, lo, math.max(1L, (hi - lo) / n + 1)))
-    }
+    else Some(KeySlices(key, n, b.getLong(0), b.getLong(1)))
   }
 
-  /** [[keySlices]] of a frame that must have a key to slice — the
-    * frozen-model bootstraps train on its slice 0.
-    */
+  private def noKey(key: String) = new IllegalArgumentException(
+    s"cannot slice on $key: no row has a non-null $key")
+
+  /** [[keySlices]] of a frame that must have a key to slice. */
   def requireKeySlices(df: DataFrame, key: String, n: Int): KeySlices =
-    keySlices(df, key, n).getOrElse(throw new IllegalArgumentException(
-      s"cannot slice on $key: no row has a non-null $key"))
+    keySlices(df, key, n).getOrElse(throw noKey(key))
+
+  /** A [[splitSource]]: the file-stream `stream` over the splits and the
+    * [[KeySlices]] they were cut by (None when no row had a `key`).
+    */
+  final case class Splits(stream: DataFrame, key: String,
+      slices: Option[KeySlices]) {
+
+    /** The slices of a frame that must have a key — a frozen-model
+      * bootstrap trains on slice 0, the first batch the drain hands over.
+      */
+    def requireSlices: KeySlices = slices.getOrElse(throw noKey(key))
+  }
 
   /** Write `df` as ONE parquet file named `split-<idx>` under `dir`
     * (zero-padded names keep lexicographic = chronological order for the
@@ -111,31 +122,34 @@ object StreamFlow {
     * input without a non-null key lands as a single empty split, so the
     * drain still runs one batch and initialises its state.
     */
-  private def writeTimeSplits(
-      df: DataFrame, key: String, n: Int, dir: String): Unit = {
+  private def writeTimeSplits(df: DataFrame, key: String, n: Int,
+      dir: String): Option[KeySlices] = {
     val out = new org.apache.hadoop.fs.Path(dir)
     val fs = out.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
     if (fs.exists(out)) fs.delete(out, true)
     fs.mkdirs(out)
-    keySlices(df, key, n) match {
+    val slices = keySlices(df, key, n)
+    slices match {
       case None => writeSplitFile(df.where(lit(false)), fs, dir, 0)
       case Some(ks) => (0 until n).foreach { i =>
         writeSplitFile(df.where(ks.slice(i)), fs, dir, i)
       }
     }
+    slices
   }
 
   /** The one way a bounded frame becomes micro-batches: write its
     * key-range splits under `dir` ([[writeTimeSplits]]) and return the
     * file-stream source over them, one split per trigger, with `df`'s
-    * schema. Nothing is read until a drain starts, so [[appendSplit]]
-    * may still add splits in between.
+    * schema, together with the slices (one bounds job in all).
+    * Nothing is read until a drain starts, so [[appendSplit]] may still
+    * add splits in between.
     */
   def splitSource(df: DataFrame, key: String, n: Int, dir: String)
-      : DataFrame = {
-    writeTimeSplits(df, key, n, dir)
-    df.sparkSession.readStream.schema(df.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
+      : Splits = {
+    val slices = writeTimeSplits(df, key, n, dir)
+    Splits(df.sparkSession.readStream.schema(df.schema)
+      .option("maxFilesPerTrigger", "1").parquet(dir), key, slices)
   }
 
   /** Run `fold` over every micro-batch of the bounded stream `source`

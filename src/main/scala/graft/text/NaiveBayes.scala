@@ -32,27 +32,36 @@ object NaiveBayes {
 
   val LnScale: Long = Vocabulary.LnScale
 
-  /** Score every non-empty document of `docs` with an NB model
-    * trained on `train` (normally a split of the corpus), where
-    * `isPos` labels the training rows. Output:
-    * (idCol, n_tokens, nb_logodds, pred_pos).
-    */
   private def tokenized(df: DataFrame, idCol: String, textCol: String,
       extra: Seq[Column]): DataFrame = df
     .select((col(idCol) +: TextFunctions.tokens(col(textCol)).as("w") +:
       extra): _*)
     .where(size(col("w")) > 0)
 
-  def scoreBinary(docs: DataFrame, train: DataFrame, idCol: String,
-      textCol: String, isPos: Column): DataFrame = {
+  /** The count model of `train`: per-term class counts (term, cpos,
+    * cneg) and the 1-row class document counts (dpos, dneg).
+    */
+  private def trainCounts(train: DataFrame, idCol: String,
+      textCol: String, isPos: Column): (DataFrame, DataFrame) = {
     val twTrain = tokenized(train, idCol, textCol, Seq(isPos.as("pos")))
-    val t = twTrain.select(explode(col("w")).as("term"), col("pos"))
-    val counts = t.groupBy("term").agg(
-      sum(when(col("pos"), 1L).otherwise(0L)).as("cpos"),
-      sum(when(col("pos"), 0L).otherwise(1L)).as("cneg"))
+    val counts = twTrain.select(explode(col("w")).as("term"), col("pos"))
+      .groupBy("term").agg(
+        sum(when(col("pos"), 1L).otherwise(0L)).as("cpos"),
+        sum(when(col("pos"), 0L).otherwise(1L)).as("cneg"))
     val docCounts = twTrain.agg(
       sum(when(col("pos"), 1L).otherwise(0L)).as("dpos"),
       sum(when(col("pos"), 0L).otherwise(1L)).as("dneg"))
+    (counts, docCounts)
+  }
+
+  /** Score every non-empty document of `docs` with an NB model
+    * trained on `train` (normally a split of the corpus), where
+    * `isPos` labels the training rows. Output:
+    * (idCol, n_tokens, nb_logodds, pred_pos).
+    */
+  def scoreBinary(docs: DataFrame, train: DataFrame, idCol: String,
+      textCol: String, isPos: Column): DataFrame = {
+    val (counts, docCounts) = trainCounts(train, idCol, textCol, isPos)
     scoreWithModel(docs, idCol, textCol, counts, docCounts)
   }
 
@@ -79,14 +88,7 @@ object NaiveBayes {
     */
   def scoreBinaryFp(docs: DataFrame, train: DataFrame, idCol: String,
       textCol: String, isPos: Column): DataFrame = {
-    val twTrain = tokenized(train, idCol, textCol, Seq(isPos.as("pos")))
-    val t = twTrain.select(explode(col("w")).as("term"), col("pos"))
-    val counts = t.groupBy("term").agg(
-      sum(when(col("pos"), 1L).otherwise(0L)).as("cpos"),
-      sum(when(col("pos"), 0L).otherwise(1L)).as("cneg"))
-    val docCounts = twTrain.agg(
-      sum(when(col("pos"), 1L).otherwise(0L)).as("dpos"),
-      sum(when(col("pos"), 0L).otherwise(1L)).as("dneg"))
+    val (counts, docCounts) = trainCounts(train, idCol, textCol, isPos)
     scoreWithModelFp(docs, idCol, textCol, counts, docCounts)
   }
 
@@ -110,7 +112,7 @@ object NaiveBayes {
     // 1-row model frame: per-token class normaliser and the doc prior
     // degenerate-model guard, evaluated IN-PLAN on the 1-row frame (no
     // extra pass over train): a single-class split or empty vocabulary
-    // would feed lnRatio a zero argument, whose Column series silently
+    // would feed lnRatio a zero argument, which det_ln silently
     // evaluates to a meaningless prior instead of throwing like the
     // scalar lnIntRef — fail loudly instead. coalesce(assert_true, 0)
     // adds exactly 0 when the model is sane, so scores are unchanged.
@@ -126,19 +128,18 @@ object NaiveBayes {
         (lnFpRatio(col("npos") + col("v"), col("nneg") + col("v")) + guard)
           .as("fpn"),
         lnFpRatio(col("dpos"), col("dneg")).as("fprior"))
-    val tw = tokenized(docs, idCol, textCol, Nil)
-    val dl = tw.select(col(idCol), size(col("w")).cast("long").as("n_tokens"))
-    tw.select(col(idCol), explode(col("w")).as("term"))
+    // `fpt` is unique on term, so the left join keeps one row per token
+    // and the row count is the document's token count
+    tokenized(docs, idCol, textCol, Nil)
+      .select(col(idCol), explode(col("w")).as("term"))
       .join(gated(fpt), Seq("term"), "left")
       .groupBy(col(idCol))
       .agg(sum(coalesce(col("fp"), lit(0L))).as("sum_fp"),
-        count(lit(1)).as("n"))
+        count(lit(1)).as("n_tokens"))
       .crossJoin(broadcast(norm))
-      .select(col(idCol),
-        (col("sum_fp") - col("n") * col("fpn") + col("fprior"))
+      .select(col(idCol), col("n_tokens"),
+        (col("sum_fp") - col("n_tokens") * col("fpn") + col("fprior"))
           .as("logodds_fp"))
-      .join(dl, idCol)
-      .select(col(idCol), col("n_tokens"), col("logodds_fp"))
   }
 
   // ------------------------------------------------------------------

@@ -19,6 +19,13 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession =
-    SparkEntry.session(cpus = 4, extra = Map("spark.app.name" -> "graft-tests"))
+  private var live: SparkSession = _
+
+  /** The suite session; a new one once a spec has stopped it. */
+  def session: SparkSession = synchronized {
+    if (live == null || live.sparkContext.isStopped)
+      live = SparkEntry.session(cpus = 4,
+        extra = Map("spark.app.name" -> "graft-tests"))
+    live
+  }
 }

@@ -33,7 +33,8 @@ class StreamFlowSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("stream-flow")
       .toString + "/splits"
     val got = scala.collection.mutable.ArrayBuffer.empty[Batch]
-    StreamFlow.drain(StreamFlow.splitSource(df, "k", n, dir)) { (b, id) =>
+    val src = StreamFlow.splitSource(df, "k", n, dir).stream
+    StreamFlow.drain(src) { (b, id) =>
       got += Batch(id, b.schema, b.collect().toSeq)
     }
     got.toSeq
